@@ -165,10 +165,12 @@ object Cli {
     case "dump" :: sqlFile :: outDir :: rest if rest.length <= 2 =>
       val compression = rest.headOption.getOrElse("snappy")
       val tables = rest.lift(1).getOrElse("all").split(',').map(_.trim).toSeq
-      val dfs = SqlDumpSource.parse(spark, sqlFile, tables)
+      // one read and one decode for all tables; their counts are the
+      // progress totals, and the conversion releases the pinned rows
+      val dump = SqlDumpSource.decodeOnce(spark, sqlFile, tables)
       Some(ConversionJob.run(
-        dfs.toSeq.sortBy(_._1).map { case (t, df) => t -> (() => df) },
-        jobConfig(outDir, compression)))
+        dump.tables.map(t => ConversionJob.Table(t, () => dump.frame(t), () => dump.rows(t))),
+        jobConfig(outDir, compression), () => dump.release()))
 
     // pg_dump plain-format dialect (beyond-reference: the reference is
     // MySQL-only; "universal" converters meet Postgres estates too)

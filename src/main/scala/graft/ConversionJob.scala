@@ -42,11 +42,6 @@ object ConversionJob {
       retryBackoffMs: Long = 1000,
       // progress line granularity (reference CHUNK_SIZE default, sh:192)
       progressChunk: Long = sys.env.get("CHUNK_SIZE").flatMap(s => Try(s.toLong).toOption).getOrElse(50000L),
-      // n/total progress denominators need a count pass first (the
-      // reference's pushed-down COUNT(*), sh:214-219 — cheap on a database,
-      // a full extra scan on file sources). false = chunk lines without a
-      // denominator, no extra pass: the right setting at 100 TB.
-      progressTotals: Boolean = true,
       // reference tees every log line to data_to_orc.log (sh:19); None = console only
       logFile: Option[String] = Some(sys.env.getOrElse("GRAFT_LOG_FILE", "data_to_orc.log")),
       // resume mode: skip tables whose output directory already carries a
@@ -67,47 +62,61 @@ object ConversionJob {
     def summary: String = s"Export completed: $successes/$total tables successful"
   }
 
+  /** One table to convert: `frame` builds its rows lazily (building it
+    * must run no job — resume reads only its schema). `rows` is the row
+    * count when the source already knows it (it may run the source's own
+    * decode job, and throws the source's failure to decode the table);
+    * None makes the conversion count the frame first. */
+  final case class Table(name: String, frame: () => DataFrame,
+                         rows: () => Option[Long] = () => None)
+
   /** Convert named tables (lazy DataFrame thunks) to ORC with per-table
     * isolation + bounded retry. Table order of the report is input order. */
-  def run(tables: Seq[(String, () => DataFrame)], cfg: JobConfig): JobReport = {
-    val logger = new JobLogger(cfg.logFile)
-    val pool = Executors.newFixedThreadPool(math.max(1, cfg.parallelWorkers))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val futures = tables.map { case (name, thunk) =>
-        Future(convertOne(name, thunk, cfg, logger))
-      }
-      val results = futures.map(f => Await.result(f, Duration.Inf))
-      val report = JobReport(results)
-      logger.log(report.summary)
-      report
-    } finally pool.shutdown()
-  }
+  def run(tables: Seq[(String, () => DataFrame)], cfg: JobConfig): JobReport =
+    run(tables.map { case (name, frame) => Table(name, frame) }, cfg, () => ())
 
-  private def convertOne(name: String, thunk: () => DataFrame, cfg: JobConfig,
-                         logger: JobLogger): TableResult = {
+  /** [[run]] over tables that may carry their source's row counts.
+    * `release` frees what the source pinned for this conversion; it runs
+    * when the conversion returns, on success or failure. */
+  def run(tables: Seq[Table], cfg: JobConfig, release: () => Unit): JobReport =
+    try {
+      val logger = new JobLogger(cfg.logFile)
+      val pool = Executors.newFixedThreadPool(math.max(1, cfg.parallelWorkers))
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+      try {
+        val futures = tables.map(t => Future(convertOne(t, cfg, logger)))
+        val results = futures.map(f => Await.result(f, Duration.Inf))
+        val report = JobReport(results)
+        logger.log(report.summary)
+        report
+      } finally pool.shutdown()
+    } finally release()
+
+  private def convertOne(table: Table, cfg: JobConfig, logger: JobLogger): TableResult = {
+    val name = table.name
     if (cfg.resume) {
-      resumeResult(name, thunk, cfg, logger) match {
+      resumeResult(name, table.frame, cfg, logger) match {
         case Some(r) => return r
         case None => ()
       }
     }
     var attempt = 0
     var lastError: Option[String] = None
-    // total is computed at most once: retries reuse the first successful
-    // count instead of re-scanning the source per attempt
-    var knownTotal: Option[Long] = None
+    // a counted total is computed at most once: retries reuse the first
+    // successful count instead of re-scanning the source per attempt
+    var counted: Option[Long] = None
     while (attempt <= cfg.retries) {
       attempt += 1
       Try {
-        val df = thunk()
+        val df = table.frame()
         val sc = df.sparkSession.sparkContext
-        // row count first, like the reference (sh:214-219), so progress
-        // lines can report n/total; skipped when progressTotals=false
-        // (file sources at scale, where COUNT is a full extra pass)
-        val total: Option[Long] =
-          if (!cfg.progressTotals) None
-          else knownTotal.orElse { knownTotal = Some(df.count()); knownTotal }
+        // the row count first, like the reference (sh:214-219), so progress
+        // lines can report n/total: the source's own count when it has
+        // one, else a count pass over the frame
+        val known = table.rows()
+        val total = known.orElse(counted).getOrElse {
+          val n = df.count(); counted = Some(n); n
+        }
         // job group is thread-local: it scopes the listener to THIS
         // table's write jobs even with parallel table futures
         val group = s"graft-convert-$name-${java.util.UUID.randomUUID()}"
@@ -115,7 +124,9 @@ object ConversionJob {
         val listener = new ProgressListener(name, total, math.max(1L, cfg.progressChunk),
           group, logger.log)
         sc.addSparkListener(listener)
-        try OrcSink.write(df, cfg.outputDir, name, cfg.compression, cfg.maxRecordsPerFile)
+        // a source-supplied count must match the footers' row sum
+        try OrcSink.write(df, cfg.outputDir, name, cfg.compression, cfg.maxRecordsPerFile,
+          expectedRows = known)
         finally { sc.removeSparkListener(listener); sc.clearJobGroup() }
       } match {
         case Success(r) =>
@@ -162,9 +173,8 @@ object ConversionJob {
     * of this table's job group and logs cumulative records written each
     * time the count crosses a chunk boundary. The final (n == total) line
     * is emitted synchronously by convertOne, so listener-bus lag can never
-    * lose the completion message. `total` None = no denominator (the
-    * no-extra-count-pass mode). */
-  private final class ProgressListener(table: String, total: Option[Long], chunk: Long,
+    * lose the completion message. */
+  private final class ProgressListener(table: String, total: Long, chunk: Long,
                                        group: String, logFn: String => Unit)
       extends SparkListener {
     private val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
@@ -194,11 +204,10 @@ object ConversionJob {
           if (delta == 0) return
           val c = cum.addAndGet(delta)
           var mark = nextMark.get()
-          if (c >= mark && total.forall(c < _)) {
+          if (c >= mark && c < total) {
             while (mark <= c) mark += chunk
             nextMark.set(mark)
-            val denom = total.map(t => s"/${fmt(t)}").getOrElse("")
-            logFn(s"Progress $table: ${fmt(c)}$denom rows")
+            logFn(s"Progress $table: ${fmt(c)}/${fmt(total)} rows")
           }
         }
       }

@@ -37,14 +37,19 @@ object OrcSink {
     * the probe column, min/max stripe stats span everything and skip
     * nothing, but a bloom probe still eliminates the row groups that
     * cannot contain the value. Costs ~bits-per-row on write; pays off on
-    * every selective equality scan. */
+    * every selective equality scan.
+    *
+    * `expectedRows`, when given, is the row count the source reported: a
+    * write whose footer row sum differs fails before its success marker
+    * is written. */
   def write(df: DataFrame, outDir: String, table: String,
             compression: String = "snappy",
             maxRecordsPerFile: Long = 0L,
             partitionBy: Seq[String] = Nil,
             mode: String = "overwrite",
             bloomFilterColumns: Seq[String] = Nil,
-            bloomFilterFpp: Double = 0.05): WriteReport = {
+            bloomFilterFpp: Double = 0.05,
+            expectedRows: Option[Long] = None): WriteReport = {
     val codec = compression.toLowerCase
     require(SupportedCodecs.contains(codec), s"unsupported ORC codec: $compression")
     val dir = s"$outDir/$table"
@@ -57,6 +62,8 @@ object OrcSink {
     if (partitionBy.nonEmpty) w = w.partitionBy(partitionBy: _*)
     w.orc(dir)
     val rep = verify(df.sparkSession, dir, table)
+    expectedRows.foreach(n => require(rep.rows == n,
+      s"$table: wrote ${rep.rows} rows but the source holds $n"))
     // success marker LAST: it exists only if the write verified, so a
     // resume pass can trust it (underscore-prefixed = invisible to
     // Spark/ORC readers). Records the SOURCE schema so resume can detect

@@ -281,19 +281,6 @@ object PgDumpSource {
     }
   }
 
-  /** All tables discovered in the dump (CREATE TABLE statements in the
-    * DDL portions; only the TableDef list is collected). */
-  def discoverTables(spark: SparkSession, path: String): Seq[TableDef] =
-    recordsRdd(spark, path)
-      .flatMap { rec =>
-        val (ddl, _) = splitRecord(rec)
-        if (ddl.toUpperCase.contains("CREATE") && ddl.toUpperCase.contains("TABLE"))
-          SqlDumpSource.statements(new java.io.StringReader(ddl))
-            .flatMap(parseCreateTable).toSeq
-        else Nil
-      }
-      .collect().toSeq
-
   /** Parse the dump into one DataFrame per (selected) table — the same
     * contract as [[SqlDumpSource.parse]] ('all' sentinel included). */
   def parse(spark: SparkSession, path: String, tables: Seq[String] = Seq("all"),
@@ -308,7 +295,7 @@ object PgDumpSource {
   /** The records RDD is persisted only WITHIN this call (discovery and
     * the per-table row RDDs share one file read while cached) and
     * unpersisted before returning — the same scoping contract as
-    * [[SqlDumpSource.parseDistributed]]: returned DataFrames evaluate
+    * [[SqlDumpSource.parse]]: returned DataFrames evaluate
     * statelessly (re-reading the file), nothing pins the dump in
     * cluster memory for the session. */
   private def parseDistributed(spark: SparkSession, path: String,

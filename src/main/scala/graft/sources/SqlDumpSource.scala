@@ -4,12 +4,15 @@ import java.io.{BufferedReader, InputStreamReader, Reader}
 import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable.ArrayBuffer
+import scala.util.{Failure, Success, Try}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.io.{LongWritable, Text}
 import org.apache.hadoop.mapreduce.lib.input.TextInputFormat
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** SQL-dump (mysqldump-style) source.
   *
@@ -29,20 +32,24 @@ import org.apache.spark.sql.types._
   *  - INSERT VALUES tuples are parsed into typed rows.
   *
   * Scale posture: two read paths.
-  *  - `parseDistributed` (default): statement-level parallelism. The dump is
+  *  - distributed (default): statement-level parallelism. The dump is
   *    split into statements by Hadoop `TextInputFormat` with record
   *    delimiter `";\n"` (mysqldump terminates every statement with `;\n`),
   *    so a 1 TB dump parses across the cluster without any single node
   *    holding the file. Caveat: a string literal OR comment containing the
   *    exact byte sequence `";\n"` splits a record early (the affected
   *    statement's rows are lost) — impossible for mysqldump output of
-  *    single-line rows without mid-statement comments, but
-  *    `parseStreaming` exists as the always-correct fallback for
-  *    arbitrary hand-written dumps.
-  *  - `parseStreaming`: constant-memory driver-side statement iterator
-  *    (fixes the reference's double whole-file read, sh:325-326 + 371-372),
+  *    single-line rows without mid-statement comments, but the discovery
+  *    job detects such a split and falls back to `parseStreaming`.
+  *  - `parseStreaming`: constant-memory driver-side statement iterator,
   *    then parallelized per batch. Correct for any input, bounded by driver
   *    I/O throughput.
+  *
+  * The reference reads its dump twice (sh:325-326 + 371-372). A conversion
+  * here reads it once: [[decodeOnce]] discovers the tables in one job and
+  * decodes the INSERTs of all selected tables in one more, into rows that
+  * stay pinned until the conversion releases them. [[parse]] returns lazy,
+  * unpinned frames instead; each re-reads the file when evaluated.
   */
 object SqlDumpSource {
 
@@ -365,21 +372,41 @@ object SqlDumpSource {
     * as CREATE TABLE bodies, so quoted identifiers containing ',' or ')'
     * parse correctly instead of truncating the list. */
   def parseInsert(stmt: String): Option[InsertStmt] = stmt match {
-    case InsertPrefixRe(table, rest) =>
-      val t = rest.dropWhile(_.isWhitespace)
-      val (cols, afterCols) =
-        if (t.startsWith("(")) {
-          val body = balancedBody(t).getOrElse(return None)
-          val names = splitTopLevel(body, ',')
-            .map(c => parseIdentifier(c.trim)._1)
-            .filter(_.nonEmpty)
-          (if (names.nonEmpty) Some(names) else None, t.substring(body.length + 2))
-        } else (None, t)
-      afterCols match {
-        case ValuesRe(values) =>
-          Some(InsertStmt(table, cols, parseValueTuples(stripOnDuplicate(values))))
-        case _ => None // INSERT ... SELECT / SET syntax — not row data
-      }
+    case InsertPrefixRe(table, rest) => insertBody(table, rest)
+    case _ => None
+  }
+
+  /** Column list and tuples of an INSERT into `table`; `rest` is the
+    * statement text after the table name. */
+  private def insertBody(table: String, rest: String): Option[InsertStmt] = {
+    val t = rest.dropWhile(_.isWhitespace)
+    val (cols, afterCols) =
+      if (t.startsWith("(")) {
+        val body = balancedBody(t).getOrElse(return None)
+        val names = splitTopLevel(body, ',')
+          .map(c => parseIdentifier(c.trim)._1)
+          .filter(_.nonEmpty)
+        (if (names.nonEmpty) Some(names) else None, t.substring(body.length + 2))
+      } else (None, t)
+    afterCols match {
+      case ValuesRe(values) =>
+        Some(InsertStmt(table, cols, parseValueTuples(stripOnDuplicate(values))))
+      case _ => None // INSERT ... SELECT / SET syntax — not row data
+    }
+  }
+
+  /** Decode one statement against `tables` (name -> index and schema):
+    * None unless it is an INSERT into one of them — the name is checked
+    * before any tuple is parsed, so other tables' INSERTs cost one prefix
+    * match and cannot fail — else the table's index with its typed rows,
+    * or the failure to decode them. The one decode step under every read
+    * path: [[parse]]'s lazy frames, [[decodeOnce]] and the streaming parse. */
+  private def decodeInsert(stmt: String, tables: collection.Map[String, (Int, StructType)])
+      : Option[(Int, Try[Seq[Row]])] = stmt match {
+    case InsertPrefixRe(table, rest) if tables.contains(table) =>
+      val (idx, schema) = tables(table)
+      Some(idx -> Try(insertBody(table, rest).fold(Seq.empty[Row])(ins =>
+        ins.rows.map(toTypedRow(_, schema, ins.columns)))))
     case _ => None
   }
 
@@ -607,67 +634,142 @@ object SqlDumpSource {
   // Public read API
   // ---------------------------------------------------------------------
 
-  /** All tables discovered in the dump (CREATE TABLE statements).
-    * Distributed: the filter+parse runs on executors; only the tiny
-    * TableDef list is collected. */
-  def discoverTables(spark: SparkSession, path: String): Seq[TableDef] =
-    statementsRdd(spark, path)
-      .filter(s => s.toUpperCase.contains("CREATE") && s.toUpperCase.contains("TABLE"))
-      .flatMap(parseCreateTable(_))
-      .collect().toSeq
-
   /** Parse the dump into one DataFrame per (selected) table.
     * `tables == Seq("all")` or empty selects every discovered table
     * (reference 'all' sentinel, sh:332-333). */
   def parse(spark: SparkSession, path: String, tables: Seq[String] = Seq("all"),
-            distributed: Boolean = true): Map[String, DataFrame] = {
-    def selected(defs: Seq[TableDef]): Seq[TableDef] =
-      if (tables.isEmpty || tables.map(_.toLowerCase).contains("all")) defs
-      else defs.filter(d => tables.contains(d.name))
-    if (distributed) parseDistributed(spark, path, selected)
-    else parseStreaming(spark, path, selected)
-  }
+            distributed: Boolean = true): Map[String, DataFrame] =
+    if (distributed) parseDistributed(spark, path, selector(tables))
+    else parseStreaming(spark, path, selector(tables))
+
+  private def selector(tables: Seq[String]): Seq[TableDef] => Seq[TableDef] = defs =>
+    if (tables.isEmpty || tables.map(_.toLowerCase).contains("all")) defs
+    else defs.filter(d => tables.contains(d.name))
 
   /** Statement-level distributed parse (see class doc for the delimiter
-    * contract). The statement RDD is cached only WITHIN this call (the
-    * split-guard probe and schema discovery share one file read) and
-    * unpersisted before the DataFrames are returned — pinning the whole
-    * dump in cluster memory for the session would accrete across dumps.
-    * Each returned table's evaluation re-reads the file: stateless and
-    * memory-safe; at 100 TB the statements partition across the cluster
-    * and no single node holds the file. */
+    * contract), lazy and unpinned. The statement RDD is cached only WITHIN
+    * this call, for its discovery job, and unpersisted before the
+    * DataFrames are returned — pinning the whole dump in cluster memory
+    * for the session would accrete across dumps. Each returned table's
+    * evaluation re-reads the file and decodes only its own INSERTs:
+    * stateless and memory-safe, but a caller that evaluates every table
+    * reads the dump once per table. [[decodeOnce]] reads it once in all. */
   private def parseDistributed(spark: SparkSession, path: String,
                                select: Seq[TableDef] => Seq[TableDef]): Map[String, DataFrame] = {
-    val stmts = statementsRdd(spark, path)
-    stmts.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // Silent-loss guard: a record that ends inside an unterminated string
-      // literal means the ";\n" delimiter split a statement mid-literal and
-      // positional rows would be lost/corrupted. Fall back to the statement
-      // scanner over the whole file, which is correct for any input.
-      if (stmts.filter(_ == UnterminatedMarker).take(1).nonEmpty) {
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"dump $path has a string literal or comment spanning a ';\\n' record " +
-            "boundary; falling back to the single-reader streaming parse")
-        return parseStreaming(spark, path, select)
-      }
-      val defs = select(
-        stmts.filter(s => s.toUpperCase.contains("CREATE") && s.toUpperCase.contains("TABLE"))
-          .flatMap(parseCreateTable(_))
-          .collect().toSeq)
-      defs.map { td =>
-        val schema = td.schema
-        val tname = td.name
-        val rows = stmts.flatMap { stmt =>
-          parseInsert(stmt) match {
-            case Some(ins) if ins.table == tname =>
-              ins.rows.map(toTypedRow(_, schema, ins.columns))
-            case _ => Nil
-          }
-        }
-        tname -> spark.createDataFrame(rows, schema)
-      }.toMap
+    val stmts = statementsRdd(spark, path).persist(StorageLevel.MEMORY_AND_DISK)
+    try discover(stmts, path) match {
+      case None => parseStreaming(spark, path, select)
+      case Some(defs) =>
+        select(defs).map { td =>
+          val one = Map(td.name -> (0, td.schema))
+          td.name -> spark.createDataFrame(
+            stmts.flatMap(decodeInsert(_, one)).flatMap(_._2.get), td.schema)
+        }.toMap
     } finally stmts.unpersist(blocking = false)
+  }
+
+  /** The selected tables of a dump, decoded for one conversion. Each
+    * table's [[frame]] filters one shared RDD of table-tagged rows;
+    * [[rows]] gives the table's row count from the job that decoded them.
+    * The pin is the caller's: [[release]] unpersists it. */
+  final class DecodedDump private[SqlDumpSource] (
+      frames: Map[String, DataFrame],
+      decode: () => Map[String, Either[String, Long]],
+      pinned: Seq[RDD[_]]) {
+    private lazy val decoded = decode()
+    /** Selected table names, sorted. */
+    val tables: Seq[String] = frames.keys.toSeq.sorted
+    /** The table's rows; building the frame runs no job. */
+    def frame(table: String): DataFrame = frames(table)
+    /** The table's row count; the first call runs the decode job. Throws
+      * the table's decode failure. None after the streaming fallback,
+      * which counts nothing. */
+    def rows(table: String): Option[Long] = decoded.get(table).map {
+      case Right(n) => n
+      case Left(error) => throw new IllegalArgumentException(error)
+    }
+    def release(): Unit = pinned.foreach(_.unpersist(blocking = false))
+  }
+
+  /** Parse for a conversion that writes every selected table: the dump is
+    * read and decoded once, not once per table.
+    *  1. Discover: one job reads the statements, cached, checks them for
+    *     a split literal and collects the CREATE TABLE definitions.
+    *  2. Decode: the first [[DecodedDump.rows]] call runs one job that
+    *     decodes the INSERTs of all selected tables from the cached
+    *     statements into a single table-tagged row RDD, pinned
+    *     MEMORY_AND_DISK, and counts each table's rows. The statements are
+    *     unpersisted when it ends. The pin keeps its lineage: lost blocks
+    *     recompute from the file.
+    * A statement whose rows fail to decode (a bad cast, a malformed hex
+    * literal) leaves its error in place of its rows, so it fails only its
+    * own table. A dump that needs the streaming fallback decodes as
+    * [[parse]] does, with no pin and no counts. */
+  def decodeOnce(spark: SparkSession, path: String, tables: Seq[String]): DecodedDump = {
+    val select = selector(tables)
+    val stmts = statementsRdd(spark, path).persist(StorageLevel.MEMORY_AND_DISK)
+    val found =
+      try discover(stmts, path)
+      catch { case e: Throwable => stmts.unpersist(blocking = false); throw e }
+    found match {
+      case None =>
+        stmts.unpersist(blocking = false)
+        new DecodedDump(parseStreaming(spark, path, select), () => Map.empty, Nil)
+      case Some(all) =>
+        val defs = select(all).toIndexedSeq
+        val index = defs.zipWithIndex.map { case (td, i) => td.name -> (i, td.schema) }.toMap
+        // a failed statement's table index is stored inverted (~i, never
+        // a row tag) with the error text as the row
+        val tagged: RDD[(Int, Row)] = stmts.flatMap(s => decodeInsert(s, index) match {
+          case Some((i, Success(rows))) => rows.iterator.map(i -> _)
+          case Some((i, Failure(e))) => Iterator(~i -> Row(e.toString))
+          case None => Iterator.empty
+        }).persist(StorageLevel.MEMORY_AND_DISK)
+        val frames = defs.zipWithIndex.map { case (td, i) =>
+          td.name -> spark.createDataFrame(tagged.filter(_._1 == i).map(_._2), td.schema)
+        }.toMap
+        def decode(): Map[String, Either[String, Long]] =
+          try {
+            val n = defs.size
+            val parts = tagged.mapPartitions { it =>
+              val counts = new Array[Long](n)
+              val errors = new Array[String](n)
+              it.foreach { case (i, r) =>
+                if (i >= 0) counts(i) += 1
+                else if (errors(~i) == null) errors(~i) = r.getString(0)
+              }
+              Iterator(counts -> errors)
+            }.collect()
+            defs.indices.map { i =>
+              defs(i).name -> parts.iterator.map(_._2(i)).find(_ != null)
+                .toLeft(parts.iterator.map(_._1(i)).sum)
+            }.toMap
+          } finally stmts.unpersist(blocking = false)
+        new DecodedDump(frames, () => decode(), Seq(stmts, tagged))
+    }
+  }
+
+  /** CREATE TABLE definitions of the statements, in dump order, from one
+    * job. None when a record ended inside an unterminated literal or
+    * comment: the ";\n" delimiter split a statement there and positional
+    * rows would be lost or corrupted, so only the statement scanner over
+    * the whole file (the streaming parse) is correct. */
+  private def discover(stmts: RDD[String], path: String): Option[Seq[TableDef]] = {
+    val found = stmts.filter(s => s == UnterminatedMarker || startsWithCreate(s)).collect()
+    if (found.contains(UnterminatedMarker)) {
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"dump $path has a string literal or comment spanning a ';\\n' record " +
+          "boundary; falling back to the single-reader streaming parse")
+      None
+    } else Some(found.toSeq.flatMap(parseCreateTable))
+  }
+
+  /** True when the statement's first word is CREATE, case-insensitively:
+    * every statement [[parseCreateTable]] accepts, without upper-casing
+    * whole INSERT payloads to find out. */
+  private def startsWithCreate(s: String): Boolean = {
+    val i = s.indexWhere(!_.isWhitespace)
+    i >= 0 && s.regionMatches(true, i, "CREATE", 0, 6)
   }
 
   /** Constant-memory driver-side single-pass parse (fixes the reference's
@@ -678,6 +780,7 @@ object SqlDumpSource {
   private def parseStreaming(spark: SparkSession, path: String,
                              select: Seq[TableDef] => Seq[TableDef]): Map[String, DataFrame] = {
     val defs = ArrayBuffer.empty[TableDef]
+    val known = scala.collection.mutable.Map.empty[String, (Int, StructType)]
     val byTable = scala.collection.mutable.Map.empty[String, ArrayBuffer[Row]]
     val reader = openReader(spark, path)
     try {
@@ -685,13 +788,12 @@ object SqlDumpSource {
         parseCreateTable(stmt) match {
           case Some(td) =>
             defs += td
+            // a repeated CREATE keeps the first schema for its rows
+            known.getOrElseUpdate(td.name, (defs.size - 1, td.schema))
             byTable.getOrElseUpdate(td.name, ArrayBuffer.empty[Row])
           case None =>
-            parseInsert(stmt).foreach { ins =>
-              defs.find(_.name == ins.table).foreach { td =>
-                byTable.getOrElseUpdate(ins.table, ArrayBuffer.empty[Row]) ++=
-                  ins.rows.map(toTypedRow(_, td.schema, ins.columns))
-              }
+            decodeInsert(stmt, known).foreach { case (i, rows) =>
+              byTable(defs(i).name) ++= rows.get
             }
         }
       }
@@ -702,15 +804,16 @@ object SqlDumpSource {
     }.toMap
   }
 
-  /** Statements as an RDD via Hadoop TextInputFormat with `";\n"` records.
-    * Each raw record is re-run through the character scanner so comments are
-    * stripped and any further `;`-separated statements inside the record
-    * split correctly (the scanner is quote-aware, so `;` in strings stays). */
   /** Sentinel statement emitted when a record's scan ended inside an
-    * unterminated quoted literal (see parseDistributed guard). The NUL
+    * unterminated quoted literal or comment (see [[discover]]). The NUL
     * bytes make collision with real SQL impossible. */
   private[sources] val UnterminatedMarker = "\u0000graft:unterminated-quote\u0000"
 
+  /** Statements as an RDD via Hadoop TextInputFormat with `";\n"` records.
+    * Each raw record is re-run through the character scanner so comments are
+    * stripped and any further `;`-separated statements inside the record
+    * split correctly (the scanner is quote-aware, so `;` in strings stays).
+    * The scanner emits no blank statements. */
   private def statementsRdd(spark: SparkSession, path: String) = {
     val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
     conf.set("textinputformat.record.delimiter", ";\n")
@@ -725,7 +828,6 @@ object SqlDumpSource {
         if (sc.unterminatedQuote || sc.unterminatedComment) list :+ UnterminatedMarker
         else list
       }
-      .filter(_.trim.nonEmpty)
   }
 
   private def openReader(spark: SparkSession, path: String): BufferedReader = {

@@ -5,6 +5,8 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.SparkException
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
 import graft.sources.{SqlDumpFixture, SqlDumpSource}
@@ -280,6 +282,32 @@ class SqlDumpSourceSpec extends AnyFunSuite with SparkSessionTestWrapper {
       val onlyB = SqlDumpSource.parse(spark, path, Seq("b"), distributed)
       assert(onlyB.keySet == Set("b"))
     }
+  }
+
+  test("tables outside the selection are never tuple-parsed") {
+    val dir = Files.createTempDirectory("dumpspec-select").toFile
+    val path = s"$dir/two.sql"
+    val sql =
+      """CREATE TABLE `a` (`id` INT, `payload` BLOB);
+        |INSERT INTO `a` VALUES (1,X'zz');
+        |CREATE TABLE `b` (`id` INT, `name` VARCHAR(10));
+        |INSERT INTO `b` VALUES (9,'x'),(10,NULL);
+        |""".stripMargin
+    Files.writeString(java.nio.file.Paths.get(path), sql)
+    val want = Set((9L, Option("x")), (10L, None))
+    def rows(df: DataFrame) = df.collect().map(r => (r.getLong(0), Option(r.getString(1)))).toSet
+    assert(rows(SqlDumpSource.parse(spark, path, Seq("b"))("b")) == want)
+    val dump = SqlDumpSource.decodeOnce(spark, path, Seq("b"))
+    try {
+      assert(dump.tables == Seq("b") && dump.rows("b") == Some(2L))
+      assert(rows(dump.frame("b")) == want)
+    } finally dump.release()
+    val out = s"$dir/out"
+    val rep = Cli.run(spark, Seq("dump", path, out, "snappy", "b")).get
+    assert(rep.successes == 1 && rep.total == 1, rep)
+    assert(rows(graft.sinks.OrcSink.read(spark, s"$out/b")) == want)
+    // selected, the malformed tuple still fails loudly
+    intercept[SparkException](SqlDumpSource.parse(spark, path, Seq("a"))("a").collect())
   }
 
   test("REPLACE INTO and modifier-prefixed inserts carry rows like INSERT") {
