@@ -309,15 +309,14 @@ object Cli {
           val (_, files, rows) = SnapshotTable.commitStats(spark, tableDir, v)
           rep(s"${name(tableDir)}@v$v", rows, files)
         // delete <table_dir> <key_col> <lo> <hi> — numeric bounds range-
-        // delete numerically; anything else is a LEXICOGRAPHIC string
-        // range (url/tenant/date-string keys), routed to deleteString
+        // delete numerically; anything else is a string range in UTF-8
+        // order (url/tenant/date-string keys)
         case ("delete", tableDir :: keyCol :: lo :: hi :: Nil) =>
-          val r = (lo.toDoubleOption, hi.toDoubleOption) match {
-            case (Some(dLo), Some(dHi)) =>
-              SnapshotTable.delete(spark, tableDir, keyCol, dLo, dHi)
-            case _ =>
-              SnapshotTable.deleteString(spark, tableDir, keyCol, lo, hi)
+          val range = (lo.toDoubleOption, hi.toDoubleOption) match {
+            case (Some(dLo), Some(dHi)) => graft.sinks.KeyRange.Num(dLo, dHi)
+            case _ => graft.sinks.KeyRange.Utf8(lo, hi)
           }
+          val r = SnapshotTable.delete(spark, tableDir, keyCol, range)
           rep(s"${name(tableDir)}@v${r.version} deleted=${r.rowsDeleted} " +
             s"rewrote=${r.filesRewritten} carried=${r.filesCarried}",
             r.rowsDeleted, r.filesRewritten)

@@ -8,6 +8,7 @@ import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
 import graft.sinks.OrcSink
 
@@ -94,8 +95,9 @@ object ConversionJob {
 
   private def convertOne(table: Table, cfg: JobConfig, logger: JobLogger): TableResult = {
     val name = table.name
+    val frame = () => orcTyped(table.frame())
     if (cfg.resume) {
-      resumeResult(name, table.frame, cfg, logger) match {
+      resumeResult(name, frame, cfg, logger) match {
         case Some(r) => return r
         case None => ()
       }
@@ -108,7 +110,7 @@ object ConversionJob {
     while (attempt <= cfg.retries) {
       attempt += 1
       Try {
-        val df = table.frame()
+        val df = frame()
         val sc = df.sparkSession.sparkContext
         // the row count first, like the reference (sh:214-219), so progress
         // lines can report n/total: the source's own count when it has
@@ -141,6 +143,20 @@ object ConversionJob {
       }
     }
     TableResult(name, success = false, 0L, 0, attempt, lastError)
+  }
+
+  /** ORC has no wall-clock timestamp type: Spark writes TIMESTAMP_NTZ as
+    * ORC `bigint` micros that only Spark reads back as a timestamp (parquet
+    * timestamps not adjusted to UTC, as DuckDB and pandas write them, read
+    * as NTZ). Top-level NTZ columns are cast to TIMESTAMP, which keeps the
+    * wall-clock value in the session time zone (UTC in every entry point). */
+  private def orcTyped(df: DataFrame): DataFrame = {
+    val ntz = df.schema.fields.collect {
+      case f if f.dataType == TimestampNTZType => f.name
+    }
+    if (ntz.isEmpty) df
+    else df.withColumns(ntz.map(c =>
+      c -> df.col(s"`${c.replace("`", "``")}`").cast(TimestampType)).toMap)
   }
 
   /** Resume check for one table: Some(result) = the prior export stands

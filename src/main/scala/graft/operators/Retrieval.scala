@@ -68,13 +68,17 @@ object Retrieval {
     }
 
   /** Per-query DISTINCT term lists under the same driver-side
-    * tokenization (the per-query view of [[queryVocab]]). */
-  private def queryTermLists(queries: Seq[(Int, String)]): Seq[(Int, Seq[String])] =
-    queries.map { case (i, q) =>
+    * tokenization (the per-query view of [[queryVocab]]). A repeated
+    * query id is one query: its entries merge into the union of their
+    * terms, so the ranking holds one row per (query_id, doc). */
+  private def queryTermLists(queries: Seq[(Int, String)]): Seq[(Int, Seq[String])] = {
+    val terms = queries.map { case (i, q) =>
       i -> q.toLowerCase(java.util.Locale.ROOT)
-        .trim.replaceAll("\\s+", " ").split(" ").toSeq
-        .filter(_.nonEmpty).distinct
+        .trim.replaceAll("\\s+", " ").split(" ").toSeq.filter(_.nonEmpty)
     }
+    terms.map(_._1).distinct.map(i =>
+      i -> terms.collect { case (`i`, ts) => ts }.flatten.distinct)
+  }
 
   /** Tokenize matching the corpus-wide convention (TextAnalysis.normText
     * + lowercase + whitespace split) — identical to the tf-idf gate so

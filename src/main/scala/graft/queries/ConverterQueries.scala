@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
-import graft.sinks.{OrcSink, SnapshotTable}
+import graft.sinks.{KeyRange, OrcSink, SnapshotTable}
 import graft.sources.{AvroSource, CsvSource, FixedWidthSource, JdbcFixture, JdbcSource, PgDumpFixture, PgDumpSource, SqlDumpFixture, SqlDumpSource, XmlSource}
 
 /** Converter round-trips under the correctness gate.
@@ -1240,7 +1240,7 @@ object ConverterQueries {
     // merge stabs files by STRING stats (upper-range base files carried
     // untouched), an interleaved append whose string envelope provably
     // clears the update envelope REBASES the merge at exactly v2, an
-    // overlapping interleave still throws, and deleteString erases a
+    // overlapping interleave still throws, and a string delete erases a
     // mid-range slice rewriting only overlapping files.
     "conv_table_rebase_str" -> { (s, d) =>
       val base = tmp(d, "snaprebasestr") + "/t"
@@ -1276,8 +1276,8 @@ object ConverterQueries {
       val overlapThrows = scala.util.Try(
         SnapshotTable.merge(s, base, overlapping, "o_key_str")).failed
         .toOption.exists(_.isInstanceOf[java.util.ConcurrentModificationException])
-      val dr = SnapshotTable.deleteString(s, base, "o_key_str",
-        f"K${maxKey / 8}%09d", f"K${maxKey / 4}%09d")
+      val dr = SnapshotTable.delete(s, base, "o_key_str",
+        KeyRange.Utf8(f"K${maxKey / 8}%09d", f"K${maxKey / 4}%09d"))
       val deleteSelective = dr.filesCarried >= 1
       // v0 base, v1 rebased-over append, v2 merge, v3 overlap append
       // (the failed merge published NOTHING), v4 the string delete
@@ -1661,8 +1661,8 @@ object ConverterQueries {
         .withColumn("pruned_some", lit(kept < total))
     },
 
-    // STRING-channel manifest pruning (scanPruned's lexicographic
-    // sibling — date-partition keys, tenant ids, priority classes are
+    // STRING-channel manifest pruning (scanPruned over a UTF-8
+    // KeyRange — date-partition keys, tenant ids, priority classes are
     // string-typed in real lakes): orders range-clustered on the
     // priority column, an equality slice plans from footer minStr/maxStr
     // and drops the provably-dead majority before any I/O. Values
@@ -1675,8 +1675,8 @@ object ConverterQueries {
           t(s, d, "orders").repartitionByRange(8, col("o_orderpriority")),
           base, "overwrite", statsCols = Seq("o_orderpriority"))
       }
-      val (df, kept, total) = SnapshotTable.scanPrunedString(
-        s, base, "o_orderpriority", "2-HIGH", "2-HIGH")
+      val (df, kept, total) = SnapshotTable.scanPruned(
+        s, base, "o_orderpriority", KeyRange.Utf8("2-HIGH", "2-HIGH"))
       df.agg(count(lit(1)).as("n"), sum(col("o_orderkey")).as("sum_key"),
           dsumr(col("o_totalprice")).as("sum_price"))
         .withColumn("n_manifest", lit(SnapshotTable.rowCount(s, base)))

@@ -106,23 +106,6 @@ object SnapshotTable {
     * full stripe skipping. */
   def sargSafeString(s: String): Boolean = s.forall(_ < '\uD800')
 
-  /** A string range predicate ORC cannot mis-skip: for order-safe
-    * literals, the plain column comparison (pushes to ORC, full stripe
-    * skipping); for exotic literals, the comparison is done on
-    * `cast(col as binary)` — unsigned byte-wise, i.e. UTF-8 order BY
-    * CONSTRUCTION — which no file-source filter translation pushes, so
-    * ORC's Java-ordered SARG evaluation never sees it. */
-  private[graft] def u8RangeCond(c: org.apache.spark.sql.Column,
-      lo: String, hi: String): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.lit
-    if (sargSafeString(lo) && sargSafeString(hi)) c >= lo && c <= hi
-    else {
-      val b = c.cast("binary")
-      b >= lit(lo.getBytes(java.nio.charset.StandardCharsets.UTF_8)) &&
-        b <= lit(hi.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
-  }
-
   /** `seq` is the DATA SEQUENCE NUMBER (the Iceberg v2 concept): the
     * version at which this file's ROWS entered the table. Stamped by
     * [[publish]] on fresh entries (-1 = not yet committed); maintenance
@@ -575,13 +558,13 @@ object SnapshotTable {
   }
 
   /** Executor-side pruned-planning over a columnar sidecar: parse each
-    * entry's stats on the executors, keep files whose [min,max] on
-    * `column` could overlap [lo, hi] (stats-less kept, like
-    * [[scanPruned]]), and collect ONLY the survivors — the kept set of
-    * a selective scan is small, so the driver never materializes the
-    * 10^7-entry manifest. */
+    * entry's stats on the executors, keep files whose stats on `column`
+    * may hold a key in `range` (stats-less kept, like [[scanPruned]]),
+    * and collect ONLY the survivors — the kept set of a selective scan
+    * is small, so the driver never materializes the 10^7-entry
+    * manifest. */
   private def keptFromSidecar(spark: SparkSession, p: Path,
-      column: String, lo: Double, hi: Double): Seq[FileEntry] = {
+      column: String, range: KeyRange): Seq[FileEntry] = {
     import org.apache.spark.sql.Encoders
     withSidecarSplits(spark, p) { scoped =>
       scoped.read.orc(p.toString)
@@ -592,12 +575,8 @@ object SnapshotTable {
         .mapPartitions(it => it.flatMap {
           case (path, rows, bytes, stats, seq) =>
             val st = parseStatsString(stats)
-            val keep = st.get(column) match {
-              case Some(ColStats(Some(mn), Some(mx), _, _, _)) =>
-                mx >= lo && mn <= hi
-              case _ => true
-            }
-            if (keep) Some(FileEntry(path, rows, bytes, st, seq))
+            if (range.mayHold(st.get(column)))
+              Some(FileEntry(path, rows, bytes, st, seq))
             else None
           // java serialization, not kryo: survivors are few by the
           // selective-scan premise, and kryo's FieldSerializer trips
@@ -1092,40 +1071,6 @@ object SnapshotTable {
     }
     throw new IllegalStateException("unreachable")
   }
-
-  /** True when no interleaved-append file can contain a key in any of the
-    * rewrite's touched ranges, proven from manifest [min,max] alone.
-    * Empty files trivially commute; files lacking numeric stats on
-    * `keyCol` cannot be proven clean and fail the check. */
-  private def disjointFromRanges(files: Seq[FileEntry], keyCol: String,
-                                 ranges: Seq[(Double, Double)]): Boolean =
-    files.forall { e =>
-      // null keys commute for both rewrites that use this check: merge's
-      // anti-join never matches a null key and delete always keeps them,
-      // so only the non-null [min,max] must clear the ranges
-      e.rows == 0 || (e.stats.get(keyCol) match {
-        case Some(ColStats(Some(mn), Some(mx), _, _, _)) =>
-          ranges.forall { case (lo, hi) => mx < lo || mn > hi }
-        case Some(ColStats(None, None, _, _, nulls)) => nulls == e.rows
-        case _ => false
-      })
-    }
-
-  /** Lexicographic twin of [[disjointFromRanges]] off the footer
-    * minStr/maxStr channel — the proof obligation for string-keyed
-    * rewrites (url-, priority-, tenant-keyed tables). Same soundness
-    * contract: only a file whose EVERY row provably clears every touched
-    * range commutes; missing string stats fail the check. */
-  private def disjointFromRangesString(files: Seq[FileEntry], keyCol: String,
-      ranges: Seq[(String, String)]): Boolean =
-    files.forall { e =>
-      e.rows == 0 || (e.stats.get(keyCol) match {
-        case Some(ColStats(_, _, Some(mn), Some(mx), _)) =>
-          ranges.forall { case (lo, hi) => u8lt(mx, lo) || u8gt(mn, hi) }
-        case Some(ColStats(None, None, None, None, nulls)) => nulls == e.rows
-        case _ => false
-      })
-    }
 
   /** Stage `df` under a fresh `data/<batch>/` directory (invisible until
     * a version file names it) and return its harvested manifest entries. */
@@ -1938,14 +1883,15 @@ object SnapshotTable {
     case other => other
   }
 
-  /** Manifest-pruned range scan: drop files whose footer [min,max] on
-    * `column` cannot intersect [lo, hi], then read the survivors and
-    * apply the REAL predicate. Returns (frame, filesKept, filesTotal).
-    * Missing stats keep the file; NULLs survive pruning only if the file
-    * holds any in-range value, and are removed by the real predicate
-    * like any other scan. */
+  /** Manifest-pruned range scan: drop files whose footer stats on
+    * `column` prove they hold no key in `range` ([[KeyRange.mayHold]]:
+    * numbers off the min/max channel, strings off minStr/maxStr in UTF-8
+    * order), then read the survivors and apply the REAL predicate.
+    * Returns (frame, filesKept, filesTotal). Missing stats keep the file;
+    * NULLs survive pruning only if the file holds any in-range value, and
+    * are removed by the real predicate like any other scan. */
   def scanPruned(spark: SparkSession, dir: String, column: String,
-                 lo: Double, hi: Double,
+                 range: KeyRange,
                  version: Option[Long] = None): (DataFrame, Int, Int) = {
     // LARGE-MANIFEST fast path (r15): plan the pruned scan from a
     // >=2M-entry columnar checkpoint with the stats filter evaluated ON
@@ -1964,14 +1910,8 @@ object SnapshotTable {
           if (tail.forall(_.action == "append") && schema0.nonEmpty) {
             distributedReplays.incrementAndGet()
             val tailFiles = tail.flatMap(_.files)
-            val kept = keptFromSidecar(spark, sidecar, column, lo, hi) ++
-              tailFiles.filter { e =>
-                e.stats.get(column) match {
-                  case Some(ColStats(Some(mn), Some(mx), _, _, _)) =>
-                    mx >= lo && mn <= hi
-                  case _ => true
-                }
-              }
+            val kept = keptFromSidecar(spark, sidecar, column, range) ++
+              tailFiles.filter(e => range.mayHold(e.stats.get(column)))
             val dels = (ckptDels ++ tail.flatMap(_.deletes)).sortBy(_.seq)
             val schema = tail.flatMap(_.schemaJson)
               .map(j => DataType.fromJson(j).asInstanceOf[StructType])
@@ -1982,49 +1922,26 @@ object SnapshotTable {
                   new java.util.ArrayList[org.apache.spark.sql.Row](),
                   nullableDeep(schema).asInstanceOf[StructType])
               else readFilesMor(spark, dir, kept, dels, Some(schema))
-            val df = base.where(rangePredicate(base, column, lo, hi))
+            val df = base.where(range.scanCond(base, column))
             return (df, kept.size, (fileCount + tailFiles.size).toInt)
           }
       }
     val (files, dels) = snapshotState(spark, dir, version)
     val schema = snapshotSchema(spark, dir, version)
-    val kept = files.filter { e =>
-      e.stats.get(column) match {
-        case Some(ColStats(Some(mn), Some(mx), _, _, _)) =>
-          mx >= lo && mn <= hi
-        case _ => true
-      }
-    }
+    val kept = files.filter(e => range.mayHold(e.stats.get(column)))
     // every file provably dead: schema-preserving empty frame (the
     // optimizer folds the false filter to an empty relation — no I/O)
     val base =
       if (kept.isEmpty) readFiles(spark, dir, files, schema).where(lit(false))
       else readFilesMor(spark, dir, kept, dels, schema)
-    val df = base.where(rangePredicate(base, column, lo, hi))
+    val df = base.where(range.scanCond(base, column))
     (df, kept.size, files.size)
   }
 
-  /** Range predicate shaped so ORC can push it: comparing the raw column
-    * against literals CAST TO THE COLUMN'S TYPE reaches the scan as
-    * `PushedFilters: [GreaterThanOrEqual, LessThanOrEqual]` (per-stripe
-    * min/max skipping INSIDE kept files); the naive `col >= doubleLit`
-    * wraps the column in cast(col as double), which pushes nothing but
-    * IsNotNull. Only exact rewrites: integral types take ceil(lo)/
-    * floor(hi) (equivalent bounds, no truncation bugs), doubles cast
-    * for free; float/decimal keep the cast-column form — rounding a
-    * double literal INTO those types could move the boundary. */
-  private def rangePredicate(df: DataFrame, column: String,
-                             lo: Double, hi: Double): Column = {
-    import org.apache.spark.sql.types._
-    df.schema.find(_.name == column).map(_.dataType) match {
-      case Some(dt @ (ByteType | ShortType | IntegerType | LongType)) =>
-        col(column) >= lit(math.ceil(lo)).cast(dt) &&
-          col(column) <= lit(math.floor(hi)).cast(dt)
-      case Some(DoubleType) =>
-        col(column) >= lit(lo) && col(column) <= lit(hi)
-      case _ => col(column) >= lo && col(column) <= hi
-    }
-  }
+  /** [[scanPruned]] over the numeric range [lo, hi]. */
+  def scanPruned(spark: SparkSession, dir: String, column: String,
+                 lo: Double, hi: Double): (DataFrame, Int, Int) =
+    scanPruned(spark, dir, column, KeyRange.Num(lo, hi))
 
   /** Snapshot row count from the MANIFEST alone — zero data I/O at any
     * table size (the planner/monitoring query every table layer answers
@@ -2077,30 +1994,6 @@ object SnapshotTable {
             .count()
       }.sum
     }
-  }
-
-  /** Manifest-pruned STRING range scan — [[scanPruned]]'s lexicographic
-    * sibling, off the footer minStr/maxStr channel (date-partition-style
-    * string keys, URL prefixes, tenant ids). Same conservative contract:
-    * files lacking string stats are kept, the real predicate still
-    * applies, correctness never depends on stats. */
-  def scanPrunedString(spark: SparkSession, dir: String, column: String,
-                       lo: String, hi: String,
-                       version: Option[Long] = None): (DataFrame, Int, Int) = {
-    val (files, dels) = snapshotState(spark, dir, version)
-    val schema = snapshotSchema(spark, dir, version)
-    val kept = files.filter { e =>
-      e.stats.get(column) match {
-        case Some(ColStats(_, _, Some(mn), Some(mx), _)) =>
-          u8gte(mx, lo) && u8lte(mn, hi)
-        case _ => true
-      }
-    }
-    val base =
-      if (kept.isEmpty) readFiles(spark, dir, files, schema).where(lit(false))
-      else readFilesMor(spark, dir, kept, dels, schema)
-    val df = base.where(u8RangeCond(col(column), lo, hi))
-    (df, kept.size, files.size)
   }
 
   // ---- write-path maintenance: compact / merge / change feed -----------
@@ -2195,17 +2088,20 @@ object SnapshotTable {
     // lexicographic envelope; commutativity holds if EITHER proof closes
     // (each is sound alone: it needs the matching stats channel present
     // in every interleaved file AND disjointness).
-    lazy val env = updates.agg(
-      org.apache.spark.sql.functions.min(col(keyCol).try_cast("double")),
-      org.apache.spark.sql.functions.max(col(keyCol).try_cast("double")),
-      org.apache.spark.sql.functions.min(col(keyCol).cast("string")),
-      org.apache.spark.sql.functions.max(col(keyCol).cast("string")))
-      .head()
+    lazy val envelopes: Seq[KeyRange] = {
+      val env = updates.agg(
+        org.apache.spark.sql.functions.min(col(keyCol).try_cast("double")),
+        org.apache.spark.sql.functions.max(col(keyCol).try_cast("double")),
+        org.apache.spark.sql.functions.min(col(keyCol).cast("string")),
+        org.apache.spark.sql.functions.max(col(keyCol).cast("string")))
+        .head()
+      Option.when(!env.isNullAt(0))(
+        KeyRange.Num(env.getDouble(0), env.getDouble(1))).toSeq ++
+        Option.when(!env.isNullAt(2))(
+          KeyRange.Utf8(env.getString(2), env.getString(3)))
+    }
     val commutes: Seq[FileEntry] => Boolean = fls =>
-      (!env.isNullAt(0) && disjointFromRanges(fls, keyCol,
-        Seq((env.getDouble(0), env.getDouble(1))))) ||
-      (!env.isNullAt(2) && disjointFromRangesString(fls, keyCol,
-        Seq((env.getString(2), env.getString(3)))))
+      envelopes.exists(_.disjointFrom(fls, keyCol))
     val v = publishRebasing(spark, dir, carried ++ fresh, Some(outSchema),
       readVersion, commutes,
       deletes = carriedDeletes(spark, dir, readVersion, carried))
@@ -2254,97 +2150,48 @@ object SnapshotTable {
                                 filesRewritten: Int, filesCarried: Int)
 
   /** Copy-on-write range DELETE — the GDPR/right-to-erasure shape (point
-    * deletes are lo == hi). Only files whose manifest [min,max] on
-    * `keyCol` can overlap [lo, hi] are rewritten with the complement
-    * predicate; every other file's manifest entry carries untouched
-    * (zero I/O). On a key-clustered table a point delete rewrites
-    * O(matched files), not O(table). One atomic overwrite commit,
-    * version-pinned; pre-delete versions stay time-travel-readable until
-    * vacuumed (an erasure deployment follows with [[vacuum]] after the
-    * retention window to destroy the old files). Files lacking `keyCol`
-    * stats are conservatively rewritten. */
+    * deletes are lo == hi) over a numeric or string key
+    * ([[KeyRange.Num]] / [[KeyRange.Utf8]]). Only files whose manifest
+    * stats on `keyCol` may hold a key in `range` are rewritten with the
+    * complement predicate; every other file's manifest entry carries
+    * untouched (zero I/O). On a key-clustered table a point delete
+    * rewrites O(matched files), not O(table). Null keys survive. One
+    * atomic overwrite commit, version-pinned; pre-delete versions stay
+    * time-travel-readable until vacuumed (an erasure deployment follows
+    * with [[vacuum]] after the retention window to destroy the old
+    * files). Files lacking `keyCol` stats are conservatively rewritten. */
   def delete(spark: SparkSession, dir: String, keyCol: String,
-             lo: Double, hi: Double,
+             range: KeyRange,
              statsCols: Seq[String] = Nil): DeleteReport = {
     val readVersion = currentVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"no snapshot table at $dir"))
     val files = snapshotFiles(spark, dir, Some(readVersion))
     val schema = snapshotSchema(spark, dir, Some(readVersion))
-    val (touched, carried) = files.partition { e =>
-      e.stats.get(keyCol) match {
-        case Some(ColStats(Some(mn), Some(mx), _, _, _)) =>
-          mx >= lo && mn <= hi
-        case _ => true // cannot prove the file is clean -> rewrite
-      }
-    }
+    val (touched, carried) =
+      files.partition(e => range.mayHold(e.stats.get(keyCol)))
     if (touched.isEmpty)
       return DeleteReport(readVersion, 0L, 0, carried.size)
-    // null keys are not in [lo, hi] — they must survive (a bare
-    // NOT BETWEEN would three-value-logic them away). The null test is on
-    // the CAST value, not the raw column: a non-numeric key (string table
-    // keyed by url, say) casts to NULL, and testing only the raw column
-    // would leave `false || !NULL = NULL` — silently deleting every
-    // non-castable row in every rewritten file. try_cast, not cast: under
-    // ANSI mode a plain cast THROWS on the first malformed key instead of
-    // yielding the NULL this survivor logic depends on.
-    val castKey = col(keyCol).try_cast("double")
     // MOR-aware: pending equality deletes must be APPLIED to the
     // rewritten files (else their rows resurrect into the fresh output)
     // and CARRIED for the untouched ones
     val pend = snapshotState(spark, dir, Some(readVersion))._2
     val survivors = readFilesMor(spark, dir, touched, pend, schema)
-      .filter(castKey.isNull || !castKey.between(lo, hi))
+      .filter(range.survivorCond(col(keyCol)))
     val fresh = writeBatch(spark, dir, survivors,
       if (statsCols.nonEmpty) statsCols else Seq(keyCol))
     // an interleaved append commutes iff it provably holds no key in the
     // deleted range (the rebased delete then serializes BEFORE it)
     val v = publishRebasing(spark, dir, carried ++ fresh, schema,
-      readVersion, disjointFromRanges(_, keyCol, Seq((lo, hi))),
+      readVersion, range.disjointFrom(_, keyCol),
       deletes = carriedDeletes(spark, dir, readVersion, carried))
     DeleteReport(v, touched.map(_.rows).sum - fresh.map(_.rows).sum,
       fresh.size, carried.size)
   }
 
-  /** Lexicographic copy-on-write range DELETE — [[delete]]'s string-keyed
-    * twin off the footer minStr/maxStr channel (url-keyed, tenant-keyed,
-    * date-string-partitioned tables: exactly the repo's dedup domain).
-    * Same contract: only files whose string [min,max] can overlap
-    * [lo, hi] are rewritten; null keys survive; every carried manifest
-    * entry is byte-identical; interleaved appends provably outside the
-    * deleted range rebase instead of failing. */
-  def deleteString(spark: SparkSession, dir: String, keyCol: String,
-                   lo: String, hi: String,
-                   statsCols: Seq[String] = Nil): DeleteReport = {
-    val readVersion = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot table at $dir"))
-    val files = snapshotFiles(spark, dir, Some(readVersion))
-    val schema = snapshotSchema(spark, dir, Some(readVersion))
-    val (touched, carried) = files.partition { e =>
-      e.stats.get(keyCol) match {
-        case Some(ColStats(_, _, Some(mn), Some(mx), _)) =>
-          u8gte(mx, lo) && u8lte(mn, hi)
-        case _ => true // cannot prove the file is clean -> rewrite
-      }
-    }
-    if (touched.isEmpty)
-      return DeleteReport(readVersion, 0L, 0, carried.size)
-    // null keys are outside any range — they survive (the isNull arm,
-    // not three-value logic). Spark-side string ordering is UTF-8
-    // binary; u8RangeCond additionally keeps order-unsafe literals out
-    // of ORC's Java-ordered SARG evaluation (which could wrongly skip
-    // row groups holding SURVIVORS -> silent over-delete).
-    val key = col(keyCol)
-    val survivors = readFilesMor(spark, dir, touched,
-      snapshotState(spark, dir, Some(readVersion))._2, schema)
-      .filter(key.isNull || !u8RangeCond(key, lo, hi))
-    val fresh = writeBatch(spark, dir, survivors,
-      if (statsCols.nonEmpty) statsCols else Seq(keyCol))
-    val v = publishRebasing(spark, dir, carried ++ fresh, schema,
-      readVersion, disjointFromRangesString(_, keyCol, Seq((lo, hi))),
-      deletes = carriedDeletes(spark, dir, readVersion, carried))
-    DeleteReport(v, touched.map(_.rows).sum - fresh.map(_.rows).sum,
-      fresh.size, carried.size)
-  }
+  /** [[delete]] over the numeric range [lo, hi]. */
+  def delete(spark: SparkSession, dir: String, keyCol: String,
+             lo: Double, hi: Double): DeleteReport =
+    delete(spark, dir, keyCol, KeyRange.Num(lo, hi))
 
   /** The pending deletes a maintenance overwrite must CARRY: those still
     * applicable to at least one carried (un-rewritten) file. Rewritten

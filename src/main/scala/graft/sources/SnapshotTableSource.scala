@@ -21,7 +21,7 @@ import org.apache.spark.sql.sources.{And, DataSourceRegister, EqualTo, Filter, G
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sinks.SnapshotTable
+import graft.sinks.{KeyRange, SnapshotTable}
 
 /** DataSource V2 provider for the snapshot table — the idiomatic Spark
   * surface over [[SnapshotTable]]'s commit log:
@@ -151,7 +151,7 @@ private[sources] class SnapshotTableTable(
     * accepted when the WHERE clause reduces to one closed range on one
     * stats-tracked column — then wholly-covered files DROP from the
     * manifest with zero data I/O and only range-straddling files
-    * rewrite ([[SnapshotTable.delete]] / [[SnapshotTable.deleteString]]).
+    * rewrite ([[SnapshotTable.delete]]).
     * `TRUNCATE TABLE` / un-conditioned DELETE publish one empty
     * overwrite. Anything else returns false and Spark plans the
     * group-based rewrite — the fast path may only ever be an
@@ -199,10 +199,8 @@ private[sources] class SnapshotTableTable(
           schemaJson = SnapshotTable.snapshotSchema(spark, dir, None)
             .map(_.json))
         ()
-      case Some(MetadataDelete.NumRange(col, lo, hi)) =>
-        SnapshotTable.delete(spark, dir, col, lo, hi); ()
-      case Some(MetadataDelete.StrRange(col, lo, hi)) =>
-        SnapshotTable.deleteString(spark, dir, col, lo, hi); ()
+      case Some(MetadataDelete.Range(col, range)) =>
+        SnapshotTable.delete(spark, dir, col, range); ()
       case None => throw new IllegalStateException(
         s"deleteWhere with filters canDeleteWhere rejected: " +
           filters.mkString(", "))
@@ -1145,13 +1143,11 @@ private[sources] class GraftCdfReaderFactory(
   *     the delete ops' null-keep arm), so no null guard is needed. */
 private[sources] object MetadataDelete {
   import org.apache.spark.sql.sources.{AlwaysTrue, EqualTo => Eq, GreaterThan => Gt, GreaterThanOrEqual => Ge, LessThan => Lt, LessThanOrEqual => Le}
+  import ManifestPruning.stringy
 
   sealed trait Plan
   case object Truncate extends Plan
-  final case class NumRange(col: String, lo: Double, hi: Double)
-    extends Plan
-  final case class StrRange(col: String, lo: String, hi: String)
-    extends Plan
+  final case class Range(col: String, range: KeyRange) extends Plan
 
   private val SafeMax = (1L << 52).toDouble
 
@@ -1175,94 +1171,57 @@ private[sources] object MetadataDelete {
     case _ => None
   }
 
-  private def str(v: Any): Option[String] = v match {
-    case s: String => Some(s)
-    case u: org.apache.spark.unsafe.types.UTF8String => Some(u.toString)
+  private val Inf = Double.PositiveInfinity
+
+  /** A conjunct's numeric range: open-ended for integral values only. */
+  private def numRange(f: Filter): Option[KeyRange] = f match {
+    case Eq(_, v) => num(v).map(d => KeyRange.Num(d, d))
+    case Ge(_, v) => num(v).map(KeyRange.Num(_, Inf))
+    case Le(_, v) => num(v).map(KeyRange.Num(-Inf, _))
+    case Gt(_, v) => integral(v).map(d => KeyRange.Num(d + 1, Inf))
+    case Lt(_, v) => integral(v).map(d => KeyRange.Num(-Inf, d - 1))
     case _ => None
   }
 
+  private def strRange(f: Filter): Option[KeyRange] = f match {
+    case Eq(_, v) => stringy(v).map(s => KeyRange.Utf8(s, s))
+    case Ge(_, v) => stringy(v).map(s => KeyRange.Utf8(Some(s), None))
+    case Le(_, v) => stringy(v).map(s => KeyRange.Utf8(None, Some(s)))
+    case _ => None
+  }
+
+  /** (column, value) of a comparison conjunct. */
+  private def operand(f: Filter): Option[(String, Any)] = f match {
+    case Eq(c, v) => Some((c, v)); case Ge(c, v) => Some((c, v))
+    case Le(c, v) => Some((c, v)); case Gt(c, v) => Some((c, v))
+    case Lt(c, v) => Some((c, v)); case _ => None
+  }
+
   def plan(filters: Array[Filter]): Option[Plan] = {
-    def conjuncts(f: Filter): Seq[Filter] = f match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
-    val cs = filters.flatMap(conjuncts).filterNot(_.isInstanceOf[AlwaysTrue])
+    val cs = filters.flatMap(ManifestPruning.conjuncts)
+      .filterNot(_.isInstanceOf[AlwaysTrue])
     if (cs.isEmpty) return Some(Truncate)
 
-    // every conjunct must bound the SAME column in ONE channel
-    val cols = cs.flatMap {
-      case Eq(c, _) => Some(c); case Ge(c, _) => Some(c)
-      case Le(c, _) => Some(c); case Gt(c, _) => Some(c)
-      case Lt(c, _) => Some(c); case _ => None
-    }.distinct
+    // every conjunct must bound the SAME column in ONE domain
+    val cols = cs.flatMap(operand).map(_._1).distinct
     if (cols.length != 1 || cols.exists(_ == null)) return None
-    val column = cols.head
-
-    // numeric channel: open-ended allowed for integral values only
-    var nLo = Double.NegativeInfinity
-    var nHi = Double.PositiveInfinity
-    var nLoClosed = true // no lower bound given => float-open is fine
-    var nHiClosed = true
-    var numeric = true
-    var sawFloatLo = false
-    var sawFloatHi = false
-    cs.foreach {
-      case Eq(_, v) => num(v) match {
-        case Some(d) => nLo = math.max(nLo, d); nHi = math.min(nHi, d)
-          sawFloatLo = false; sawFloatHi = false
-          nLoClosed = true; nHiClosed = true
-        case None => numeric = false
-      }
-      case Ge(_, v) => num(v) match {
-        case Some(d) =>
-          if (d > nLo) { nLo = d; sawFloatLo = integral(v).isEmpty }
-        case None => numeric = false
-      }
-      case Le(_, v) => num(v) match {
-        case Some(d) =>
-          if (d < nHi) { nHi = d; sawFloatHi = integral(v).isEmpty }
-        case None => numeric = false
-      }
-      case Gt(_, v) => integral(v) match {
-        case Some(d) => if (d + 1 > nLo) { nLo = d + 1; sawFloatLo = false }
-        case None => numeric = false
-      }
-      case Lt(_, v) => integral(v) match {
-        case Some(d) => if (d - 1 < nHi) { nHi = d - 1; sawFloatHi = false }
-        case None => numeric = false
-      }
-      case _ => numeric = false
+    def within(toRange: Filter => Option[KeyRange]): Option[KeyRange] = {
+      val rs = cs.map(toRange)
+      if (rs.exists(_.isEmpty)) None
+      else rs.flatten.reduceOption((a, b) => a.intersect(b).get)
     }
-    // a float bound with the OPPOSITE side open diverges on NaN (SQL
-    // deletes NaN under `d >= lo`; a [lo, +Inf] range keeps it)
-    if (numeric && sawFloatLo && nHi.isPosInfinity) numeric = false
-    if (numeric && sawFloatHi && nLo.isNegInfinity) numeric = false
-    if (numeric) return Some(NumRange(column, nLo, nHi))
-
-    // string channel: closed ranges only
-    var sLo: Option[String] = None
-    var sHi: Option[String] = None
-    var stringy = true
-    cs.foreach {
-      case Eq(_, v) => str(v) match {
-        case Some(s) =>
-          sLo = Some(sLo.fold(s)(x => if (s > x) s else x))
-          sHi = Some(sHi.fold(s)(x => if (s < x) s else x))
-        case None => stringy = false
-      }
-      case Ge(_, v) => str(v) match {
-        case Some(s) => sLo = Some(sLo.fold(s)(x => if (s > x) s else x))
-        case None => stringy = false
-      }
-      case Le(_, v) => str(v) match {
-        case Some(s) => sHi = Some(sHi.fold(s)(x => if (s < x) s else x))
-        case None => stringy = false
-      }
-      case _ => stringy = false
-    }
-    if (stringy && sLo.nonEmpty && sHi.nonEmpty)
-      Some(StrRange(column, sLo.get, sHi.get))
-    else None
+    val range = within(numRange).filter {
+      // a float bound with an open side diverges on NaN (SQL deletes NaN
+      // under `d >= lo`; a [lo, +Inf] range keeps it)
+      case KeyRange.Num(lo, hi) => (lo > -Inf && hi < Inf) ||
+        cs.flatMap(operand).forall(o => integral(o._2).nonEmpty)
+      case _ => true
+    }.orElse(within(strRange).filter {
+      // string domain: closed ranges only
+      case KeyRange.Utf8(lo, hi) => lo.nonEmpty && hi.nonEmpty
+      case _ => false
+    })
+    range.map(Range(cols.head, _))
   }
 
   /** Key-shaped DELETE for merge-on-read routing: exactly one filter,
@@ -1294,12 +1253,6 @@ private[sources] object MetadataDelete {
   }
 }
 
-/** Stats-channel file pruning shared by the DSv2 batch scan: per-column
-  * bounds distilled from pushed conjuncts, tested against each manifest
-  * entry's numeric (min/max as double; timestamps=epoch-millis,
-  * dates=epoch-days — the footer-harvest encodings) or lexicographic
-  * (minStr/maxStr) channel. Strict bounds are widened to inclusive —
-  * pruning may only ever drop files that PROVABLY hold no match. */
 /** Guard for handing pushed source filters to ORC's SearchArgument:
   * a filter is order-safe iff every string literal it carries compares
   * identically under UTF-16 (ORC-java's SARG evaluation) and UTF-8
@@ -1336,6 +1289,12 @@ private[graft] object GraftSargGuard {
   }
 }
 
+/** Stats-channel file pruning shared by the DSv2 batch scan: each pushed
+  * conjunct becomes a [[KeyRange]] in its value's domain, tested against
+  * each manifest entry's numeric (min/max as double; timestamps=epoch-
+  * millis, dates=epoch-days — the footer-harvest encodings) or UTF-8
+  * (minStr/maxStr) channel. Strict bounds are widened to inclusive —
+  * pruning may only ever drop files that PROVABLY hold no match. */
 private[graft] object ManifestPruning {
 
   /** And-tree -> conjunct list. */
@@ -1353,7 +1312,7 @@ private[graft] object ManifestPruning {
     case _ => None
   }
 
-  private def stringy(v: Any): Option[String] = v match {
+  def stringy(v: Any): Option[String] = v match {
     case s: String => Some(s)
     case u: org.apache.spark.unsafe.types.UTF8String => Some(u.toString)
     case _ => None
@@ -1395,71 +1354,40 @@ private[graft] object ManifestPruning {
     case _ => false
   }
 
-  /** (column, lowerOrNone, upperOrNone) in both channels. */
-  private case class Bounds(loD: Option[Double], hiD: Option[Double],
-                            loS: Option[String], hiS: Option[String])
-
-  private def boundsOf(filters: Seq[Filter]): Map[String, Bounds] = {
-    val m = scala.collection.mutable.Map.empty[String, Bounds]
-    def upd(c: String)(f: Bounds => Bounds): Unit =
-      m(c) = f(m.getOrElse(c, Bounds(None, None, None, None)))
-    def maxLo(a: Option[Double], b: Double) = Some(a.fold(b)(math.max(_, b)))
-    def minHi(a: Option[Double], b: Double) = Some(a.fold(b)(math.min(_, b)))
-    // string bounds compare in UTF-8 byte order (the footer stats'
-    // ordering) — Java String ordering diverges on supplementary planes
-    def maxLoS(a: Option[String], b: String) =
-      Some(a.fold(b)(x => if (SnapshotTable.u8gte(x, b)) x else b))
-    def minHiS(a: Option[String], b: String) =
-      Some(a.fold(b)(x => if (SnapshotTable.u8lte(x, b)) x else b))
-    filters.foreach {
-      case EqualTo(c, v) =>
-        numeric(v).foreach(d => upd(c)(b =>
-          b.copy(loD = maxLo(b.loD, d), hiD = minHi(b.hiD, d))))
-        stringy(v).foreach(s => upd(c)(b =>
-          b.copy(loS = maxLoS(b.loS, s), hiS = minHiS(b.hiS, s))))
-      case GreaterThan(c, v) => // widened to >= (conservative)
-        numeric(v).foreach(d => upd(c)(b => b.copy(loD = maxLo(b.loD, d))))
-        stringy(v).foreach(s => upd(c)(b => b.copy(loS = maxLoS(b.loS, s))))
-      case GreaterThanOrEqual(c, v) =>
-        numeric(v).foreach(d => upd(c)(b => b.copy(loD = maxLo(b.loD, d))))
-        stringy(v).foreach(s => upd(c)(b => b.copy(loS = maxLoS(b.loS, s))))
-      case LessThan(c, v) => // widened to <=
-        numeric(v).foreach(d => upd(c)(b => b.copy(hiD = minHi(b.hiD, d))))
-        stringy(v).foreach(s => upd(c)(b => b.copy(hiS = minHiS(b.hiS, s))))
-      case LessThanOrEqual(c, v) =>
-        numeric(v).foreach(d => upd(c)(b => b.copy(hiD = minHi(b.hiD, d))))
-        stringy(v).foreach(s => upd(c)(b => b.copy(hiS = minHiS(b.hiS, s))))
-      case _ =>
+  /** The key range a pushed conjunct admits on its column, in the
+    * domain of its value; strict bounds widen to inclusive. */
+  private def rangeOf(f: Filter): Option[(String, KeyRange)] = {
+    def num(v: Any, lo: Boolean, hi: Boolean) = numeric(v).map(d =>
+      KeyRange.Num(if (lo) d else Double.NegativeInfinity,
+        if (hi) d else Double.PositiveInfinity))
+    def utf8(v: Any, lo: Boolean, hi: Boolean) = stringy(v).map(s =>
+      KeyRange.Utf8(Option.when(lo)(s), Option.when(hi)(s)))
+    def side(c: String, v: Any, lo: Boolean, hi: Boolean) =
+      num(v, lo, hi).orElse(utf8(v, lo, hi)).map(c -> _)
+    f match {
+      case EqualTo(c, v) => side(c, v, lo = true, hi = true)
+      case GreaterThan(c, v) => side(c, v, lo = true, hi = false)
+      case GreaterThanOrEqual(c, v) => side(c, v, lo = true, hi = false)
+      case LessThan(c, v) => side(c, v, lo = false, hi = true)
+      case LessThanOrEqual(c, v) => side(c, v, lo = false, hi = true)
+      case _ => None
     }
-    m.toMap
   }
 
   /** Runtime IN containment — the DPP channel: entries that could hold
-    * ANY of `values` on column `c`, judged from the manifest [min,max].
+    * ANY of `values` on column `c`, judged from the manifest stats.
     * Conservative like [[prune]]: a file is dropped only when EVERY
-    * value provably misses it (all values converted to the file's stats
-    * channel, none lands in range). Null values are ignored (an
-    * equality join key of NULL matches no row); an all-null/empty value
-    * set matches NOTHING, so every file drops. NaN values make the set
-    * unprovable (footers are NaN-blind) and keep all files. */
+    * value provably misses it. Null values are ignored (an equality join
+    * key of NULL matches no row); an all-null/empty value set matches
+    * NOTHING, so every file drops. A value of neither key domain keeps
+    * all files, and NaN values prove nothing (footers are NaN-blind). */
   def pruneIn(entries: Seq[SnapshotTable.FileEntry], c: String,
               values: Array[Any]): Seq[SnapshotTable.FileEntry] = {
     val vs = values.filter(_ != null)
     if (vs.isEmpty) return Seq.empty
-    val nums = vs.flatMap(numeric)
-    val strs = vs.flatMap(stringy)
-    val allNum = nums.length == vs.length && !nums.exists(_.isNaN)
-    val allStr = strs.length == vs.length
-    entries.filter { e =>
-      e.stats.get(c) match {
-        case Some(SnapshotTable.ColStats(Some(mn), Some(mx), _, _, _)) =>
-          !allNum || nums.exists(d => d >= mn && d <= mx)
-        case Some(SnapshotTable.ColStats(_, _, Some(mn), Some(mx), _)) =>
-          !allStr || strs.exists(s =>
-            SnapshotTable.u8gte(s, mn) && SnapshotTable.u8lte(s, mx))
-        case _ => true // no stats channel: always kept
-      }
-    }
+    val points = vs.flatMap(v => rangeOf(EqualTo(c, v))).map(_._2)
+    if (points.length < vs.length) return entries
+    entries.filter(e => points.exists(_.mayHold(e.stats.get(c))))
   }
 
   /** Does EVERY ROW of `e` provably satisfy conjunct `f`? The exactness
@@ -1526,20 +1454,10 @@ private[graft] object ManifestPruning {
   /** Entries that could satisfy ALL the pushed conjuncts. */
   def prune(entries: Seq[SnapshotTable.FileEntry],
             filters: Seq[Filter]): Seq[SnapshotTable.FileEntry] = {
-    val bounds = boundsOf(filters)
-    if (bounds.isEmpty) return entries
-    entries.filter { e =>
-      bounds.forall { case (c, b) =>
-        e.stats.get(c) match {
-          case Some(SnapshotTable.ColStats(Some(mn), Some(mx), _, _, _)) =>
-            b.loD.forall(_ <= mx) && b.hiD.forall(_ >= mn)
-          case Some(SnapshotTable.ColStats(_, _, Some(mn), Some(mx), _)) =>
-            b.loS.forall(SnapshotTable.u8lte(_, mx)) &&
-              b.hiS.forall(SnapshotTable.u8gte(_, mn))
-          case _ => true // no stats channel: always kept
-        }
-      }
-    }
+    val ranges = filters.flatMap(rangeOf)
+    if (ranges.isEmpty) return entries
+    entries.filter(e => ranges.forall { case (c, r) =>
+      r.mayHold(e.stats.get(c)) })
   }
 }
 

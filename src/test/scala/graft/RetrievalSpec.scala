@@ -50,6 +50,20 @@ class RetrievalSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(all == Set(0L, 1L)) // d2 absent, not ranked-with-zero
   }
 
+  test("bm25TopK and bm25PrfTopK treat a repeated query id as one query " +
+    "(the union of its terms): one row per (query_id, doc)") {
+    val split = Seq(3 -> "cherry", 3 -> "durian")
+    val merged = Seq(3 -> "cherry durian")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy(col("rank"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getDouble(3))).toSeq
+    val out = rows(Retrieval.bm25TopK(corpus, split, k = 3))
+    assert(out.map(r => (r._1, r._2)).distinct.size == out.size)
+    assert(out == rows(Retrieval.bm25TopK(corpus, merged, k = 3)))
+    assert(rows(Retrieval.bm25PrfTopK(corpus, split, k = 3)) ==
+      rows(Retrieval.bm25PrfTopK(corpus, merged, k = 3)))
+  }
+
   test("rrfFuse sums reciprocal ranks and breaks ties by id") {
     val a = Seq((1L, 10L, 1L), (1L, 11L, 2L)).toDF("query_id", "doc_id", "rank")
     val b = Seq((1L, 11L, 1L), (1L, 12L, 2L)).toDF("query_id", "doc_id", "rank")

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.functions._
 
-import graft.sinks.SnapshotTable
+import graft.sinks.{KeyRange, SnapshotTable}
 
 /** Commit-protocol laws for the snapshot table: replay semantics
   * (append/overwrite/time travel), atomicity (unpublished data is
@@ -204,7 +204,7 @@ class SnapshotTableSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(SnapshotTable.rowCount(spark, dir) === 200)
     // soundness on an arbitrary lexicographic range
     val (pruned, kept, total) =
-      SnapshotTable.scanPrunedString(spark, dir, "name", "r10", "r12")
+      SnapshotTable.scanPruned(spark, dir, "name", KeyRange.Utf8("r10", "r12"))
     val want = SnapshotTable.read(spark, dir)
       .filter(col("name") >= "r10" && col("name") <= "r12").count()
     assert(pruned.count() === want && want > 0)
@@ -213,7 +213,7 @@ class SnapshotTableSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val dir2 = freshDir()
     SnapshotTable.commit(spark, df(0, 50), dir2, "overwrite") // no stats
     val (p2, k2, t2) =
-      SnapshotTable.scanPrunedString(spark, dir2, "name", "r1", "r2")
+      SnapshotTable.scanPruned(spark, dir2, "name", KeyRange.Utf8("r1", "r2"))
     assert(k2 === t2)
     assert(p2.count() === SnapshotTable.read(spark, dir2)
       .filter(col("name") >= "r1" && col("name") <= "r2").count())
@@ -385,6 +385,44 @@ class SnapshotTableSpec extends AnyFunSuite with SparkSessionTestWrapper {
       val (p3, k3, t3) = SnapshotTable.scanPruned(spark, dir, "id",
         0.0, 9.0)
       assert(p3.count() === 9 && k3 === kept && t3 === total)
+    } finally {
+      spark.conf.unset("spark.graft.table.checkpoint.inlineMaxFiles")
+      spark.conf.unset("spark.graft.table.checkpoint.distributedMinFiles")
+    }
+  }
+
+  test("distributed manifest queries: a string range scan plans from " +
+    "the sidecar on the executors and agrees with the driver path") {
+    val dir = freshDir()
+    def keyed(lo: Long, hi: Long) = (lo until hi)
+      .map(i => (f"k$i%04d", i)).toDF("skey", "id")
+    spark.conf.set("spark.graft.table.checkpoint.inlineMaxFiles", "1")
+    spark.conf.set("spark.graft.table.checkpoint.distributedMinFiles", "1")
+    try {
+      SnapshotTable.commit(spark, keyed(0, 10), dir, "overwrite",
+        statsCols = Seq("skey"))
+      (1 to 9).foreach(i =>
+        SnapshotTable.commit(spark, keyed(i * 10, i * 10 + 10), dir,
+          "append", statsCols = Seq("skey")))
+      // the pending delete lands at v10, inside the checkpoint; the
+      // append-only tail past it is pruned driver-side
+      SnapshotTable.deleteByKeys(spark, dir, "skey", Seq("k0003").toDF("skey"))
+      SnapshotTable.commit(spark, keyed(100, 115), dir, "append",
+        statsCols = Seq("skey"))
+      val range = KeyRange.Utf8("k0000", "k0009")
+      val before = SnapshotTable.distributedReplays.get()
+      val (pruned, kept, total) =
+        SnapshotTable.scanPruned(spark, dir, "skey", range)
+      assert(SnapshotTable.distributedReplays.get() > before,
+        "expected the executor-side sidecar planning to engage")
+      assert(kept < total)
+      assert(total === SnapshotTable.snapshotFiles(spark, dir).size)
+      val rows = pruned.count()
+      assert(rows === 9)
+      spark.conf.set("spark.graft.table.checkpoint.distributedMinFiles",
+        "1000000000")
+      val (p2, k2, t2) = SnapshotTable.scanPruned(spark, dir, "skey", range)
+      assert((p2.count(), k2, t2) === ((rows, kept, total)))
     } finally {
       spark.conf.unset("spark.graft.table.checkpoint.inlineMaxFiles")
       spark.conf.unset("spark.graft.table.checkpoint.distributedMinFiles")
@@ -664,8 +702,8 @@ class SnapshotTableSpec extends AnyFunSuite with SparkSessionTestWrapper {
       .toDF("url", "id")
     SnapshotTable.commit(spark, docs.repartitionByRange(4, col("url")),
       dir, "overwrite", statsCols = Seq("url"))
-    val r = SnapshotTable.deleteString(spark, dir, "url",
-      "https://site-010.example", "https://site-019.example")
+    val r = SnapshotTable.delete(spark, dir, "url",
+      KeyRange.Utf8("https://site-010.example", "https://site-019.example"))
     assert(r.rowsDeleted === 10)
     // only the file(s) whose string [min,max] overlap the range rewrote
     assert(r.filesCarried >= 2, s"carried=${r.filesCarried}")
@@ -678,7 +716,7 @@ class SnapshotTableSpec extends AnyFunSuite with SparkSessionTestWrapper {
     SnapshotTable.commit(spark,
       Seq(("a", 1L), (null, 2L), ("m", 3L), ("z", 4L)).toDF("url", "id"),
       dir2, "overwrite", statsCols = Seq("url"))
-    val r2 = SnapshotTable.deleteString(spark, dir2, "url", "l", "n")
+    val r2 = SnapshotTable.delete(spark, dir2, "url", KeyRange.Utf8("l", "n"))
     assert(r2.rowsDeleted === 1)
     assert(SnapshotTable.read(spark, dir2).filter(col("url").isNull)
       .count() === 1)
@@ -840,8 +878,8 @@ class SnapshotTableSpec extends AnyFunSuite with SparkSessionTestWrapper {
           if (i == 0) "overwrite" else "append", statsCols = Seq("name"))
       }
       SnapshotTable.expireVersions(spark, dir, keepLast = 2)
-      val (df2, kept, total) = SnapshotTable.scanPrunedString(
-        spark, dir, "name", "carol", "carol~")
+      val (df2, kept, total) = SnapshotTable.scanPruned(
+        spark, dir, "name", KeyRange.Utf8("carol", "carol~"))
       assert(df2.filter(col("name").startsWith("carol")).count() === 50)
       assert(kept < total, "string stats lost through the sidecar")
     }

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.functions._
 
-import graft.sinks.SnapshotTable
+import graft.sinks.{KeyRange, SnapshotTable}
 import graft.sources.ManifestPruning
 
 /** String-bound proofs must compare in UTF-8 BYTE order (what ORC
@@ -98,7 +98,7 @@ class SnapshotTableUtf8OrderSpec extends AnyFunSuite
     val dir = freshDir()
     stageMixed(dir)
     val (df, kept, total) =
-      SnapshotTable.scanPrunedString(spark, dir, "k", FFFF, FFFF)
+      SnapshotTable.scanPruned(spark, dir, "k", KeyRange.Utf8(FFFF, FFFF))
     assert(kept == 1 && total == 1)
     // the range condition must also stay out of ORC's Java-ordered SARG
     // evaluation (u8RangeCond's binary shield) — else the row group is
@@ -110,10 +110,30 @@ class SnapshotTableUtf8OrderSpec extends AnyFunSuite
     "carry it and leave the keyed row alive)") {
     val dir = freshDir()
     stageMixed(dir)
-    val rep = SnapshotTable.deleteString(spark, dir, "k", FFFF, FFFF)
+    val rep = SnapshotTable.delete(spark, dir, "k", KeyRange.Utf8(FFFF, FFFF))
     assert(rep.rowsDeleted == 1L, s"expected 1 deleted row, got $rep")
     val left = SnapshotTable.read(spark, dir)
       .select("v").as[Long].collect().toSet
     assert(left == Set(1L, 3L))
+  }
+
+  test("a metadata-only SQL DELETE intersects string bounds in UTF-8 " +
+    "order (UTF-16 order kept the looser bound and over-deleted)") {
+    spark.conf.set("spark.sql.catalog.graft",
+      "graft.sources.SnapshotTableCatalog")
+    val dir = freshDir()
+    val top = new String(Character.toChars(0x10FFFF))
+    SnapshotTable.commit(spark,
+      Seq(("\uE001", 1L), (EMOJI + "x", 2L), ("a", 3L)).toDF("k", "v")
+        .coalesce(1), dir, "overwrite", statsCols = Seq("k"))
+    // UTF-16 order ranks U+E000 above the emoji, UTF-8 order below it
+    val where = s"k >= '\uE000' AND k >= '$EMOJI' AND k <= '$top'"
+    val want = SnapshotTable.read(spark, dir).filter(not(expr(where)))
+      .select("v").as[Long].collect().toSet
+    assert(want == Set(1L, 3L))
+    spark.sql(s"DELETE FROM graft.`$dir` WHERE $where")
+    val left = SnapshotTable.read(spark, dir)
+      .select("v").as[Long].collect().toSet
+    assert(left == want, s"DELETE must keep exactly NOT (where) rows")
   }
 }
