@@ -162,25 +162,19 @@ object Cli {
         names.map(t => t -> (() => JdbcSource.read(spark, conn, t))),
         jobConfig(outDir, compression)))
 
-    case "dump" :: sqlFile :: outDir :: rest if rest.length <= 2 =>
+    // mysqldump (`dump`) or pg_dump plain format (`pgdump`, beyond-reference:
+    // the reference is MySQL-only; "universal" converters meet Postgres
+    // estates too): one read and one decode for all tables; their counts
+    // are the progress totals, and the conversion releases the pinned rows
+    case (cmd @ ("dump" | "pgdump")) :: sqlFile :: outDir :: rest if rest.length <= 2 =>
       val compression = rest.headOption.getOrElse("snappy")
       val tables = rest.lift(1).getOrElse("all").split(',').map(_.trim).toSeq
-      // one read and one decode for all tables; their counts are the
-      // progress totals, and the conversion releases the pinned rows
-      val dump = SqlDumpSource.decodeOnce(spark, sqlFile, tables)
+      val dump =
+        if (cmd == "dump") SqlDumpSource.decodeOnce(spark, sqlFile, tables)
+        else PgDumpSource.decodeOnce(spark, sqlFile, tables)
       Some(ConversionJob.run(
         dump.tables.map(t => ConversionJob.Table(t, () => dump.frame(t), () => dump.rows(t))),
         jobConfig(outDir, compression), () => dump.release()))
-
-    // pg_dump plain-format dialect (beyond-reference: the reference is
-    // MySQL-only; "universal" converters meet Postgres estates too)
-    case "pgdump" :: sqlFile :: outDir :: rest if rest.length <= 2 =>
-      val compression = rest.headOption.getOrElse("snappy")
-      val tables = rest.lift(1).getOrElse("all").split(',').map(_.trim).toSeq
-      val dfs = PgDumpSource.parse(spark, sqlFile, tables)
-      Some(ConversionJob.run(
-        dfs.toSeq.sortBy(_._1).map { case (t, df) => t -> (() => df) },
-        jobConfig(outDir, compression)))
 
     case "csv" :: csvPath :: outDir :: rest if rest.length <= 3 =>
       val delimiter = rest.headOption.getOrElse(",")

@@ -38,12 +38,10 @@ object PgDumpFixture {
     val declared = schema.fields.map(f =>
       f.name -> typeOverrides.getOrElse(f.name, defaultPgType(f.dataType))).toMap
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    val raw = fs.create(p, true)
-    val stream: java.io.OutputStream =
-      if (path.toLowerCase.endsWith(".gz")) new java.util.zip.GZIPOutputStream(raw)
-      else raw
-    val out = new BufferedWriter(new OutputStreamWriter(stream, StandardCharsets.UTF_8))
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    val raw = p.getFileSystem(conf).create(p, true)
+    val out = new BufferedWriter(new OutputStreamWriter(
+      SqlDumpFixture.compressByExtension(path, raw, conf), StandardCharsets.UTF_8))
     try {
       out.write("--\n-- PostgreSQL database dump (graft test fixture)\n--\n\n")
       out.write("SET statement_timeout = 0;\n")

@@ -1,44 +1,39 @@
 package graft.sources
 
-import java.io.{BufferedReader, InputStreamReader}
+import java.io.{InputStream, StringReader}
 import java.nio.charset.StandardCharsets
 
-import scala.collection.mutable.ArrayBuffer
+import scala.util.Try
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.io.{LongWritable, Text}
-import org.apache.hadoop.mapreduce.lib.input.TextInputFormat
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
-import graft.sources.SqlDumpSource.TableDef
+import graft.sources.SqlDumpSource.{DecodedDump, Engine, TableDef}
 
-/** PostgreSQL `pg_dump` plain-format reader — the second dump dialect
-  * beside [[SqlDumpSource]]'s mysqldump. The universal converter claim
-  * of the reference (README.md:7 "Universal Data to ORC") stops at
-  * MySQL; real estates run Postgres too, and its dump format is
-  * structurally different: schema as `CREATE TABLE` with Postgres types,
-  * data as `COPY <table> (<cols>) FROM stdin;` blocks of TAB-separated
-  * lines terminated by a `\.` line, with backslash escapes and `\N`
-  * NULLs (https://www.postgresql.org/docs/current/sql-copy.html, TEXT
-  * format).
+/** PostgreSQL `pg_dump` plain-format dialect — the second dump dialect
+  * beside [[SqlDumpSource]]'s mysqldump, read by the same
+  * [[SqlDumpSource.Engine]]. The universal converter claim of the
+  * reference (README.md:7 "Universal Data to ORC") stops at MySQL; real
+  * estates run Postgres too, and its dump format is structurally
+  * different: schema as `CREATE TABLE` with Postgres types, data as
+  * `COPY <table> (<cols>) FROM stdin;` blocks of TAB-separated lines
+  * terminated by a `\.` line, with backslash escapes and `\N` NULLs
+  * (https://www.postgresql.org/docs/current/sql-copy.html, TEXT format).
   *
-  * Distributed parse: the file splits on the COPY terminator sequence
-  * `"\n\\.\n"` (Hadoop `textinputformat.record.delimiter`), so each
+  * Records end at the COPY terminator sequence `"\n\\.\n"`, so each
   * record is self-contained — leading DDL text, then at most ONE
-  * `COPY ... FROM stdin;` header, then that block's data lines. A data
-  * line can never equal `\.` (COPY escapes every backslash as `\\`), so
-  * the split point is exact; rows parse where the record landed and the
-  * 100 TB dump never converges on one node. Everything before the FIRST
-  * header line in a record is DDL (two COPY blocks can't share a record
-  * — the terminator between them is the split), everything after is
-  * data; data lines that merely LOOK like SQL can't be misread because
-  * position, not content, classifies them.
-  *
-  * The streaming fallback (`distributed = false`, also the `.gz` path's
-  * friend) is a single-reader line loop with the same state machine:
-  * constant driver memory until the final `parallelize`, fixture-scale
-  * by design like [[SqlDumpSource.parseStreaming]].
+  * `COPY ... FROM stdin;` header, then that block's data lines — and is
+  * the unit the engine decodes. A data line can never equal `\.` (COPY
+  * escapes every backslash as `\\`), so the split point is exact and rows
+  * parse where the record landed. A COPY block is one record, though:
+  * one table's data must fit one task's `String` (< 2 GB), and a split
+  * that starts inside a block scans to the block's end first.
+  * Everything before the FIRST header line in a record is DDL (two COPY
+  * blocks can't share a record — the terminator between them is the
+  * split), everything after is data; data lines that merely LOOK like SQL
+  * can't be misread because position, not content, classifies them. The
+  * engine's streaming fallback reads the same records from one
+  * stream, so both modes decode through the one decoder below.
   */
 object PgDumpSource {
 
@@ -248,147 +243,79 @@ object PgDumpSource {
       }.toIndexedSeq)
   }
 
-  /** Record delimiter: the COPY terminator line. The leading `\n`
-    * anchors to line start, so a cell VALUE ending in an escaped
-    * backslash before a literal dot can't fake it (that renders as
-    * `\\.` mid-line, never `\n\.` + newline). */
-  private val RecordDelimiter = "\n\\.\n"
-
-  private def recordsRdd(spark: SparkSession, path: String) = {
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    conf.set("textinputformat.record.delimiter", RecordDelimiter)
-    spark.sparkContext
-      .newAPIHadoopFile(path, classOf[TextInputFormat],
-        classOf[LongWritable], classOf[Text], conf)
-      .map(_._2.toString)
-  }
-
-  /** Split one record into (ddlText, Option[(table, cols, dataLines)]).
-    * Position classifies: first COPY header line starts the data. */
-  private[sources] def splitRecord(record: String): (String, Option[(String, Option[Seq[String]], Seq[String])]) = {
-    val lines = record.split("\n", -1)
-    val headerIdx = lines.indexWhere(l => parseCopyHeader(l).isDefined)
-    if (headerIdx < 0) (record, None)
-    else {
-      val (table, cols) = parseCopyHeader(lines(headerIdx)).get
-      val ddl = lines.take(headerIdx).mkString("\n")
-      // keep empty lines — an empty line IS a row (one empty text cell).
-      // Only a trailing `\.` survives here when the file ends without a
-      // final newline (the delimiter needs one); drop that terminator.
-      val data0 = lines.drop(headerIdx + 1).toSeq
-      val data = if (data0.lastOption.contains("\\.")) data0.dropRight(1) else data0
-      (ddl, Some((table, cols, data)))
-    }
-  }
-
   /** Parse the dump into one DataFrame per (selected) table — the same
     * contract as [[SqlDumpSource.parse]] ('all' sentinel included). */
   def parse(spark: SparkSession, path: String, tables: Seq[String] = Seq("all"),
-            distributed: Boolean = true): Map[String, DataFrame] = {
-    def selected(defs: Seq[TableDef]): Seq[TableDef] =
-      if (tables.isEmpty || tables.map(_.toLowerCase).contains("all")) defs
-      else defs.filter(d => tables.contains(d.name))
-    if (distributed) parseDistributed(spark, path, selected)
-    else parseStreaming(spark, path, selected)
+            distributed: Boolean = true): Map[String, DataFrame] =
+    Engine.parse(Postgres, spark, path, tables, distributed)
+
+  /** The dump read and decoded once for a conversion — the same contract
+    * as [[SqlDumpSource.decodeOnce]]. */
+  def decodeOnce(spark: SparkSession, path: String, tables: Seq[String]): DecodedDump =
+    Engine.decodeOnce(Postgres, spark, path, tables)
+
+  /** pg_dump as the engine reads it: a record is one unit, its COPY
+    * block's lines are the rows of the block's table. */
+  private object Postgres extends SqlDumpSource.Dialect {
+    /** The COPY terminator line. The leading `\n` anchors to line start,
+      * so a cell VALUE ending in an escaped backslash before a literal dot
+      * can't fake it (that renders as `\\.` mid-line, never `\n\.` +
+      * newline). */
+    val delimiter = "\n\\.\n"
+    def units(record: String): Iterator[String] = Iterator.single(record)
+    def streamUnits(in: InputStream): Iterator[String] = Engine.records(in, delimiter)
+    /** The record up to the end of its COPY header line: the data lines
+      * stay on the executor. */
+    def ddl(record: String): Option[String] = Some(splitRecord(record) match {
+      case (_, Some((_, _, data))) => record.substring(0, math.min(data, record.length))
+      case _ => record
+    })
+    def declare(ddl: String, declared: String => Boolean): Seq[TableDef] = {
+      val (text, copy) = splitRecord(ddl)
+      val defs = SqlDumpSource.statements(new StringReader(text)).flatMap(parseCreateTable).toSeq
+      // loud-failure contract: skipping the block would lose its rows
+      copy.foreach { case (table, _, _) =>
+        require(declared(table) || defs.exists(_.name == table),
+          s"COPY data for table '$table' with no parsed CREATE TABLE before it — " +
+            "pg_dump emits DDL first; this dump is malformed or uses an unsupported DDL form")
+      }
+      defs
+    }
+    def decode(record: String, tables: collection.Map[String, (Int, StructType)])
+        : Option[(Int, Try[Seq[Row]])] = splitRecord(record) match {
+      case (_, Some((table, cols, data))) if tables.contains(table) =>
+        val (idx, schema) = tables(table)
+        Some(idx -> Try(dataLines(record, data).map(l => toTypedRow(parseCopyLine(l), schema, cols))))
+      case _ => None
+    }
   }
 
-  /** The records RDD is persisted only WITHIN this call (discovery and
-    * the per-table row RDDs share one file read while cached) and
-    * unpersisted before returning — the same scoping contract as
-    * [[SqlDumpSource.parse]]: returned DataFrames evaluate
-    * statelessly (re-reading the file), nothing pins the dump in
-    * cluster memory for the session. */
-  private def parseDistributed(spark: SparkSession, path: String,
-                               select: Seq[TableDef] => Seq[TableDef]): Map[String, DataFrame] = {
-    val records = recordsRdd(spark, path)
-    records.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val defs = select(
-        records.flatMap { rec =>
-          val (ddl, _) = splitRecord(rec)
-          if (ddl.toUpperCase.contains("CREATE") && ddl.toUpperCase.contains("TABLE"))
-            SqlDumpSource.statements(new java.io.StringReader(ddl))
-              .flatMap(parseCreateTable).toSeq
-          else Nil
-        }.collect().toSeq)
-      defs.map { td =>
-        val schema = td.schema
-        val tname = td.name
-        val rows = records.flatMap { rec =>
-          splitRecord(rec) match {
-            case (_, Some((table, cols, data))) if table == tname =>
-              data.map(l => toTypedRow(parseCopyLine(l), schema, cols))
-            case _ => Nil
-          }
-        }
-        tname -> spark.createDataFrame(rows, schema)
-      }.toMap
-    } finally records.unpersist(blocking = false)
-  }
-
-  private def parseStreaming(spark: SparkSession, path: String,
-                             select: Seq[TableDef] => Seq[TableDef]): Map[String, DataFrame] = {
-    val defs = ArrayBuffer.empty[TableDef]
-    val byTable = scala.collection.mutable.Map.empty[String, ArrayBuffer[Row]]
-    val pendingDdl = new StringBuilder
-    var inCopy: Option[(String, Option[Seq[String]])] = None
-    def flushDdl(): Unit = {
-      if (pendingDdl.nonEmpty) {
-        SqlDumpSource.statements(new java.io.StringReader(pendingDdl.toString))
-          .flatMap(parseCreateTable).foreach(defs += _)
-        pendingDdl.clear()
+  /** Split one record at its first COPY header line: the DDL text before
+    * it and, when there is one, the COPY's table, column list and the
+    * offset of its first data line. Position classifies: the first header
+    * line starts the data, and the data lines are not scanned. */
+  private[sources] def splitRecord(record: String)
+      : (String, Option[(String, Option[Seq[String]], Int)]) = {
+    var start = 0
+    while (start <= record.length) {
+      val nl = record.indexOf('\n', start)
+      val end = if (nl < 0) record.length else nl
+      parseCopyHeader(record.substring(start, end)) match {
+        case Some((table, cols)) => return (record.substring(0, start), Some((table, cols, end + 1)))
+        case None => start = end + 1
       }
     }
-    val reader = openReader(spark, path)
-    try {
-      var line = reader.readLine()
-      while (line != null) {
-        inCopy match {
-          case Some((table, cols)) =>
-            if (line == "\\.") inCopy = None
-            else defs.find(_.name == table) match {
-              case Some(td) =>
-                byTable.getOrElseUpdate(table, ArrayBuffer.empty[Row]) +=
-                  toTypedRow(parseCopyLine(line), td.schema, cols)
-              case None =>
-                // loud-failure contract: silently dropping the block
-                // would lose data AND diverge from distributed mode
-                // (which discovers all DDL before reading rows)
-                throw new IllegalArgumentException(
-                  s"COPY data for table '$table' with no parsed CREATE " +
-                    "TABLE before it — pg_dump emits DDL first; this dump " +
-                    "is malformed or uses an unsupported DDL form")
-            }
-          case None =>
-            parseCopyHeader(line) match {
-              case Some((table, cols)) =>
-                flushDdl()
-                inCopy = Some((table, cols))
-              case None =>
-                pendingDdl.append(line).append('\n')
-            }
-        }
-        line = reader.readLine()
-      }
-      flushDdl()
-    } finally reader.close()
-    select(defs.toSeq).map { td =>
-      td.name -> spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          byTable.getOrElse(td.name, ArrayBuffer.empty[Row]).toSeq),
-        td.schema)
-    }.toMap
+    (record, None)
   }
 
-  private def openReader(spark: SparkSession, path: String): BufferedReader = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = p.getFileSystem(conf)
-    val raw = fs.open(p)
-    val codec = new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
-      .getCodec(p)
-    val in: java.io.InputStream =
-      if (codec != null) codec.createInputStream(raw) else raw
-    new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
-  }
+  /** The data lines of a record from offset `from` on. An empty line IS a
+    * row (one empty text cell). Only a trailing `\.` survives here when the
+    * file ends without a final newline (the delimiter needs one); that
+    * terminator is dropped. */
+  private def dataLines(record: String, from: Int): Seq[String] =
+    if (from > record.length) Nil
+    else {
+      val lines = record.substring(from).split("\n", -1).toSeq
+      if (lines.lastOption.contains("\\.")) lines.dropRight(1) else lines
+    }
 }

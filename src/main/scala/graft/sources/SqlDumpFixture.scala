@@ -101,7 +101,7 @@ object SqlDumpFixture {
     * distributed statement parse then splits ONE compressed dump across
     * executors at block boundaries — gzip can't); `.zst` through the
     * Hadoop codec when its native binding is loadable. */
-  private def compressByExtension(path: String, raw: java.io.OutputStream,
+  private[sources] def compressByExtension(path: String, raw: java.io.OutputStream,
                                   conf: org.apache.hadoop.conf.Configuration): java.io.OutputStream = {
     val lower = path.toLowerCase
     if (lower.endsWith(".gz")) new java.util.zip.GZIPOutputStream(raw)

@@ -1,14 +1,17 @@
 package graft.sources
 
-import java.io.{BufferedReader, InputStreamReader, Reader}
+import java.io.{BufferedReader, InputStream, InputStreamReader, Reader, StringReader}
 import java.nio.charset.StandardCharsets
 
+import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 import scala.util.{Failure, Success, Try}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.io.{LongWritable, Text}
+import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.hadoop.mapreduce.lib.input.TextInputFormat
+import org.apache.hadoop.util.LineReader
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
@@ -31,19 +34,17 @@ import org.apache.spark.storage.StorageLevel
   *    VARCHAR→STRING, DECIMAL→DECIMAL, DATE→DATE, DATETIME→TIMESTAMP);
   *  - INSERT VALUES tuples are parsed into typed rows.
   *
-  * Scale posture: two read paths.
-  *  - distributed (default): statement-level parallelism. The dump is
-  *    split into statements by Hadoop `TextInputFormat` with record
-  *    delimiter `";\n"` (mysqldump terminates every statement with `;\n`),
-  *    so a 1 TB dump parses across the cluster without any single node
-  *    holding the file. Caveat: a string literal OR comment containing the
-  *    exact byte sequence `";\n"` splits a record early (the affected
-  *    statement's rows are lost) — impossible for mysqldump output of
-  *    single-line rows without mid-statement comments, but the discovery
-  *    job detects such a split and falls back to `parseStreaming`.
-  *  - `parseStreaming`: constant-memory driver-side statement iterator,
-  *    then parallelized per batch. Correct for any input, bounded by driver
-  *    I/O throughput.
+  * One engine reads both dump dialects: [[Engine]] owns the record
+  * reader, the table selection, discovery with its streaming fallback,
+  * the lazy [[parse]] and [[decodeOnce]]; a [[Dialect]] supplies only its
+  * record delimiter, its units, its CREATE TABLE parsing and its record
+  * decoder. This object's dialect is mysqldump: `";\n"` records (every
+  * statement ends so), split into statements by the scanner. Caveat: a
+  * string literal OR comment containing the exact byte sequence `";\n"`
+  * splits a record early — impossible for mysqldump output of single-line
+  * rows without mid-statement comments, but the scanner flags such a cut
+  * and the engine falls back to its streaming read. [[PgDumpSource]] is
+  * the other dialect.
   *
   * The reference reads its dump twice (sh:325-326 + 371-372). A conversion
   * here reads it once: [[decodeOnce]] discovers the tables in one job and
@@ -399,8 +400,7 @@ object SqlDumpSource {
     * None unless it is an INSERT into one of them — the name is checked
     * before any tuple is parsed, so other tables' INSERTs cost one prefix
     * match and cannot fail — else the table's index with its typed rows,
-    * or the failure to decode them. The one decode step under every read
-    * path: [[parse]]'s lazy frames, [[decodeOnce]] and the streaming parse. */
+    * or the failure to decode them: the mysqldump dialect's decoder. */
   private def decodeInsert(stmt: String, tables: collection.Map[String, (Int, StructType)])
       : Option[(Int, Try[Seq[Row]])] = stmt match {
     case InsertPrefixRe(table, rest) if tables.contains(table) =>
@@ -634,38 +634,80 @@ object SqlDumpSource {
   // Public read API
   // ---------------------------------------------------------------------
 
-  /** Parse the dump into one DataFrame per (selected) table.
-    * `tables == Seq("all")` or empty selects every discovered table
-    * (reference 'all' sentinel, sh:332-333). */
+  /** Parse the dump into one DataFrame per (selected) table, lazy and
+    * unpinned: see [[Engine.parse]]. `tables == Seq("all")` or empty
+    * selects every discovered table (reference 'all' sentinel,
+    * sh:332-333). */
   def parse(spark: SparkSession, path: String, tables: Seq[String] = Seq("all"),
             distributed: Boolean = true): Map[String, DataFrame] =
-    if (distributed) parseDistributed(spark, path, selector(tables))
-    else parseStreaming(spark, path, selector(tables))
+    Engine.parse(MySql, spark, path, tables, distributed)
 
-  private def selector(tables: Seq[String]): Seq[TableDef] => Seq[TableDef] = defs =>
-    if (tables.isEmpty || tables.map(_.toLowerCase).contains("all")) defs
-    else defs.filter(d => tables.contains(d.name))
+  /** Parse for a conversion that writes every selected table, reading the
+    * dump once: see [[Engine.decodeOnce]]. */
+  def decodeOnce(spark: SparkSession, path: String, tables: Seq[String]): DecodedDump =
+    Engine.decodeOnce(MySql, spark, path, tables)
 
-  /** Statement-level distributed parse (see class doc for the delimiter
-    * contract), lazy and unpinned. The statement RDD is cached only WITHIN
-    * this call, for its discovery job, and unpersisted before the
-    * DataFrames are returned — pinning the whole dump in cluster memory
-    * for the session would accrete across dumps. Each returned table's
-    * evaluation re-reads the file and decodes only its own INSERTs:
-    * stateless and memory-safe, but a caller that evaluates every table
-    * reads the dump once per table. [[decodeOnce]] reads it once in all. */
-  private def parseDistributed(spark: SparkSession, path: String,
-                               select: Seq[TableDef] => Seq[TableDef]): Map[String, DataFrame] = {
-    val stmts = statementsRdd(spark, path).persist(StorageLevel.MEMORY_AND_DISK)
-    try discover(stmts, path) match {
-      case None => parseStreaming(spark, path, select)
-      case Some(defs) =>
-        select(defs).map { td =>
-          val one = Map(td.name -> (0, td.schema))
-          td.name -> spark.createDataFrame(
-            stmts.flatMap(decodeInsert(_, one)).flatMap(_._2.get), td.schema)
-        }.toMap
-    } finally stmts.unpersist(blocking = false)
+  /** mysqldump as the engine reads it: `";\n"` records, statements as
+    * units, the INSERT/REPLACE tuples of a selected table as its rows. */
+  private object MySql extends Dialect {
+    val delimiter = ";\n"
+    /** Each record is re-run through the statement scanner, so comments
+      * are stripped and further `;`-separated statements inside it split
+      * correctly (the scanner is quote-aware, so `;` in strings stays). */
+    def units(record: String): Iterator[String] = {
+      val sc = new StatementScanner(new StringReader(record))
+      sc ++ (if (sc.unterminatedQuote || sc.unterminatedComment) Iterator.single(UnterminatedMarker)
+        else Iterator.empty)
+    }
+    def streamUnits(in: InputStream): Iterator[String] =
+      statements(new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8)))
+    def ddl(stmt: String): Option[String] = if (startsWithCreate(stmt)) Some(stmt) else None
+    def declare(ddl: String, declared: String => Boolean): Seq[TableDef] = parseCreateTable(ddl).toSeq
+    def decode(stmt: String, tables: collection.Map[String, (Int, StructType)])
+        : Option[(Int, Try[Seq[Row]])] = decodeInsert(stmt, tables)
+  }
+
+  /** True when the statement's first word is CREATE, case-insensitively:
+    * every statement [[parseCreateTable]] accepts, without upper-casing
+    * whole INSERT payloads to find out. */
+  private def startsWithCreate(s: String): Boolean = {
+    val i = s.indexWhere(!_.isWhitespace)
+    i >= 0 && s.regionMatches(true, i, "CREATE", 0, 6)
+  }
+
+  /** Sentinel unit emitted when a record's scan ended inside an
+    * unterminated quoted literal or comment (see [[Engine.discover]]).
+    * The NUL bytes make collision with real SQL impossible. */
+  private[sources] val UnterminatedMarker = "\u0000graft:unterminated-quote\u0000"
+
+  // ---------------------------------------------------------------------
+  // The dump engine: one read path for every dump dialect
+  // ---------------------------------------------------------------------
+
+  /** What a dump format supplies to the [[Engine]]. A unit is what the
+    * format decodes at once: a statement of a mysqldump, a record (DDL
+    * text, then at most one COPY block) of a pg_dump. */
+  private[sources] trait Dialect extends Serializable {
+    /** The Hadoop record delimiter the distributed read splits the dump on. */
+    def delimiter: String
+    /** The units of one record, with [[UnterminatedMarker]] last when the
+      * record ended inside a literal or comment: the delimiter cut a unit
+      * there, and only [[streamUnits]] reads the dump correctly. */
+    def units(record: String): Iterator[String]
+    /** The units of the whole dump, read in order from one stream. */
+    def streamUnits(in: InputStream): Iterator[String]
+    /** The text of a unit that may declare tables, which discovery sends
+      * to the driver; None for a unit that declares none. Runs on every
+      * unit, so it must be cheap. */
+    def ddl(unit: String): Option[String]
+    /** The tables `ddl` declares, given the names declared before it.
+      * Throws when the text breaks a rule of the format. */
+    def declare(ddl: String, declared: String => Boolean): Seq[TableDef]
+    /** None unless the unit holds rows of one of `tables` (name -> index
+      * and schema), which it checks before decoding anything; else that
+      * table's index with its typed rows, or the failure to decode them. */
+    def decode(unit: String, tables: collection.Map[String, (Int, StructType)])
+        : Option[(Int, Try[Seq[Row]])]
   }
 
   /** The selected tables of a dump, decoded for one conversion. Each
@@ -691,160 +733,180 @@ object SqlDumpSource {
     def release(): Unit = pinned.foreach(_.unpersist(blocking = false))
   }
 
-  /** Parse for a conversion that writes every selected table: the dump is
-    * read and decoded once, not once per table.
-    *  1. Discover: one job reads the statements, cached, checks them for
-    *     a split literal and collects the CREATE TABLE definitions.
-    *  2. Decode: the first [[DecodedDump.rows]] call runs one job that
-    *     decodes the INSERTs of all selected tables from the cached
-    *     statements into a single table-tagged row RDD, pinned
-    *     MEMORY_AND_DISK, and counts each table's rows. The statements are
-    *     unpersisted when it ends. The pin keeps its lineage: lost blocks
-    *     recompute from the file.
-    * A statement whose rows fail to decode (a bad cast, a malformed hex
-    * literal) leaves its error in place of its rows, so it fails only its
-    * own table. A dump that needs the streaming fallback decodes as
-    * [[parse]] does, with no pin and no counts. */
-  def decodeOnce(spark: SparkSession, path: String, tables: Seq[String]): DecodedDump = {
-    val select = selector(tables)
-    val stmts = statementsRdd(spark, path).persist(StorageLevel.MEMORY_AND_DISK)
-    val found =
-      try discover(stmts, path)
-      catch { case e: Throwable => stmts.unpersist(blocking = false); throw e }
-    found match {
-      case None =>
-        stmts.unpersist(blocking = false)
-        new DecodedDump(parseStreaming(spark, path, select), () => Map.empty, Nil)
-      case Some(all) =>
-        val defs = select(all).toIndexedSeq
-        val index = defs.zipWithIndex.map { case (td, i) => td.name -> (i, td.schema) }.toMap
-        // a failed statement's table index is stored inverted (~i, never
-        // a row tag) with the error text as the row
-        val tagged: RDD[(Int, Row)] = stmts.flatMap(s => decodeInsert(s, index) match {
-          case Some((i, Success(rows))) => rows.iterator.map(i -> _)
-          case Some((i, Failure(e))) => Iterator(~i -> Row(e.toString))
-          case None => Iterator.empty
-        }).persist(StorageLevel.MEMORY_AND_DISK)
-        val frames = defs.zipWithIndex.map { case (td, i) =>
-          td.name -> spark.createDataFrame(tagged.filter(_._1 == i).map(_._2), td.schema)
-        }.toMap
-        def decode(): Map[String, Either[String, Long]] =
-          try {
-            val n = defs.size
-            val parts = tagged.mapPartitions { it =>
-              val counts = new Array[Long](n)
-              val errors = new Array[String](n)
-              it.foreach { case (i, r) =>
-                if (i >= 0) counts(i) += 1
-                else if (errors(~i) == null) errors(~i) = r.getString(0)
-              }
-              Iterator(counts -> errors)
-            }.collect()
-            defs.indices.map { i =>
-              defs(i).name -> parts.iterator.map(_._2(i)).find(_ != null)
-                .toLeft(parts.iterator.map(_._1(i)).sum)
-            }.toMap
-          } finally stmts.unpersist(blocking = false)
-        new DecodedDump(frames, () => decode(), Seq(stmts, tagged))
+  /** Reads a dump of any [[Dialect]]. Two read paths:
+    *  - distributed (default): Hadoop `TextInputFormat` splits the dump
+    *    into records on the dialect's delimiter, so a 1 TB dump parses
+    *    across the cluster without any single node holding the file. A
+    *    record cut inside a literal or comment (a mysqldump string holding
+    *    `";\n"`) is detected by discovery, which then falls back to:
+    *  - streaming: one driver-side reader over the whole file, constant
+    *    memory until the rows are parallelized. Correct for any input,
+    *    bounded by driver I/O throughput.
+    * Both read `.gz`/`.bz2` through Hadoop's codecs and `.zst` through
+    * [[ZstdJniCodec]]. */
+  private[sources] object Engine {
+
+    /** The `all`/selection rule: `all` or no names selects every table. */
+    private def selects(tables: Seq[String]): String => Boolean =
+      if (tables.isEmpty || tables.exists(_.equalsIgnoreCase("all"))) _ => true
+      else tables.contains(_)
+
+    /** One DataFrame per selected table. The units are cached only WITHIN
+      * this call, for the discovery job, and unpersisted before the frames
+      * are returned — pinning the whole dump in cluster memory for the
+      * session would accrete across dumps. Each frame's evaluation re-reads
+      * the file and decodes only its own table's units: stateless and
+      * memory-safe, but a caller that evaluates every table reads the dump
+      * once per table. [[decodeOnce]] reads it once in all. */
+    def parse(d: Dialect, spark: SparkSession, path: String, tables: Seq[String],
+              distributed: Boolean): Map[String, DataFrame] = {
+      val select = selects(tables)
+      if (!distributed) return streaming(d, spark, path, select)
+      val units = unitsRdd(d, spark, path).persist(StorageLevel.MEMORY_AND_DISK)
+      try discover(d, units, path) match {
+        case None => streaming(d, spark, path, select)
+        case Some(defs) =>
+          defs.filter(td => select(td.name)).map { td =>
+            val one = Map(td.name -> (0, td.schema))
+            td.name -> spark.createDataFrame(
+              units.flatMap(d.decode(_, one)).flatMap(_._2.get), td.schema)
+          }.toMap
+      } finally units.unpersist(blocking = false)
     }
-  }
 
-  /** CREATE TABLE definitions of the statements, in dump order, from one
-    * job. None when a record ended inside an unterminated literal or
-    * comment: the ";\n" delimiter split a statement there and positional
-    * rows would be lost or corrupted, so only the statement scanner over
-    * the whole file (the streaming parse) is correct. */
-  private def discover(stmts: RDD[String], path: String): Option[Seq[TableDef]] = {
-    val found = stmts.filter(s => s == UnterminatedMarker || startsWithCreate(s)).collect()
-    if (found.contains(UnterminatedMarker)) {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"dump $path has a string literal or comment spanning a ';\\n' record " +
-          "boundary; falling back to the single-reader streaming parse")
-      None
-    } else Some(found.toSeq.flatMap(parseCreateTable))
-  }
-
-  /** True when the statement's first word is CREATE, case-insensitively:
-    * every statement [[parseCreateTable]] accepts, without upper-casing
-    * whole INSERT payloads to find out. */
-  private def startsWithCreate(s: String): Boolean = {
-    val i = s.indexWhere(!_.isWhitespace)
-    i >= 0 && s.regionMatches(true, i, "CREATE", 0, 6)
-  }
-
-  /** Constant-memory driver-side single-pass parse (fixes the reference's
-    * double whole-file read): CREATE TABLE statements register schemas as
-    * they stream by (mysqldump emits CREATE before INSERT), INSERT rows are
-    * typed on the fly. Always correct regardless of `;` placement; bounded
-    * by driver read throughput, so use `distributed=true` for large dumps. */
-  private def parseStreaming(spark: SparkSession, path: String,
-                             select: Seq[TableDef] => Seq[TableDef]): Map[String, DataFrame] = {
-    val defs = ArrayBuffer.empty[TableDef]
-    val known = scala.collection.mutable.Map.empty[String, (Int, StructType)]
-    val byTable = scala.collection.mutable.Map.empty[String, ArrayBuffer[Row]]
-    val reader = openReader(spark, path)
-    try {
-      statements(reader).foreach { stmt =>
-        parseCreateTable(stmt) match {
-          case Some(td) =>
-            defs += td
-            // a repeated CREATE keeps the first schema for its rows
-            known.getOrElseUpdate(td.name, (defs.size - 1, td.schema))
-            byTable.getOrElseUpdate(td.name, ArrayBuffer.empty[Row])
-          case None =>
-            decodeInsert(stmt, known).foreach { case (i, rows) =>
-              byTable(defs(i).name) ++= rows.get
-            }
-        }
+    /** The dump read and decoded once, not once per table.
+      *  1. Discover: one job reads the units, cached, checks them for a
+      *     cut literal and collects the table declarations.
+      *  2. Decode: the first [[DecodedDump.rows]] call runs one job that
+      *     decodes the units of all selected tables from the cache into a
+      *     single table-tagged row RDD, pinned MEMORY_AND_DISK, and counts
+      *     each table's rows. The units are unpersisted when it ends. The
+      *     pin keeps its lineage: lost blocks recompute from the file.
+      * A unit whose rows fail to decode (a bad cast, a malformed hex
+      * literal) leaves its error in place of its rows, so it fails only its
+      * own table. A dump that needs the streaming fallback decodes as
+      * [[parse]] does, with no pin and no counts. */
+    def decodeOnce(d: Dialect, spark: SparkSession, path: String,
+                   tables: Seq[String]): DecodedDump = {
+      val select = selects(tables)
+      val units = unitsRdd(d, spark, path).persist(StorageLevel.MEMORY_AND_DISK)
+      val found =
+        try discover(d, units, path)
+        catch { case e: Throwable => units.unpersist(blocking = false); throw e }
+      found match {
+        case None =>
+          units.unpersist(blocking = false)
+          new DecodedDump(streaming(d, spark, path, select), () => Map.empty, Nil)
+        case Some(all) =>
+          val defs = all.filter(td => select(td.name)).toIndexedSeq
+          val index = defs.zipWithIndex.map { case (td, i) => td.name -> (i, td.schema) }.toMap
+          // a failed unit's table index is stored inverted (~i, never a
+          // row tag) with the error text as the row
+          val tagged: RDD[(Int, Row)] = units.flatMap(u => d.decode(u, index) match {
+            case Some((i, Success(rows))) => rows.iterator.map(i -> _)
+            case Some((i, Failure(e))) => Iterator(~i -> Row(e.toString))
+            case None => Iterator.empty
+          }).persist(StorageLevel.MEMORY_AND_DISK)
+          val frames = defs.zipWithIndex.map { case (td, i) =>
+            td.name -> spark.createDataFrame(tagged.filter(_._1 == i).map(_._2), td.schema)
+          }.toMap
+          def decode(): Map[String, Either[String, Long]] =
+            try {
+              val n = defs.size
+              val parts = tagged.mapPartitions { it =>
+                val counts = new Array[Long](n)
+                val errors = new Array[String](n)
+                it.foreach { case (i, r) =>
+                  if (i >= 0) counts(i) += 1
+                  else if (errors(~i) == null) errors(~i) = r.getString(0)
+                }
+                Iterator(counts -> errors)
+              }.collect()
+              defs.indices.map { i =>
+                defs(i).name -> parts.iterator.map(_._2(i)).find(_ != null)
+                  .toLeft(parts.iterator.map(_._1(i)).sum)
+              }.toMap
+            } finally units.unpersist(blocking = false)
+          new DecodedDump(frames, () => decode(), Seq(units, tagged))
       }
-    } finally reader.close()
-    select(defs.toSeq).map { td =>
-      td.name -> spark.createDataFrame(
-        spark.sparkContext.parallelize(byTable(td.name).toSeq), td.schema)
-    }.toMap
-  }
+    }
 
-  /** Sentinel statement emitted when a record's scan ended inside an
-    * unterminated quoted literal or comment (see [[discover]]). The NUL
-    * bytes make collision with real SQL impossible. */
-  private[sources] val UnterminatedMarker = "\u0000graft:unterminated-quote\u0000"
-
-  /** Statements as an RDD via Hadoop TextInputFormat with `";\n"` records.
-    * Each raw record is re-run through the character scanner so comments are
-    * stripped and any further `;`-separated statements inside the record
-    * split correctly (the scanner is quote-aware, so `;` in strings stays).
-    * The scanner emits no blank statements. */
-  private def statementsRdd(spark: SparkSession, path: String) = {
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    conf.set("textinputformat.record.delimiter", ";\n")
-    // `.sql.zst` dumps decode through the zstd-jni-backed codec (Hadoop's
-    // own ZStandardCodec needs a native libhadoop this image lacks)
-    ZstdJniCodec.register(conf)
-    spark.sparkContext
-      .newAPIHadoopFile(path, classOf[TextInputFormat], classOf[LongWritable], classOf[Text], conf)
-      .flatMap { r =>
-        val sc = new StatementScanner(new java.io.StringReader(r._2.toString))
-        val list = sc.toList
-        if (sc.unterminatedQuote || sc.unterminatedComment) list :+ UnterminatedMarker
-        else list
+    /** The tables the units declare, in dump order, from one job. None
+      * when a record ended inside an unterminated literal or comment: the
+      * delimiter split a unit there and rows would be lost or corrupted,
+      * so only the streaming read of the whole file is correct. */
+    private def discover(d: Dialect, units: RDD[String], path: String): Option[Seq[TableDef]] = {
+      val found = units.flatMap(u => if (u == UnterminatedMarker) Some(u) else d.ddl(u)).collect()
+      if (found.contains(UnterminatedMarker)) {
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"dump $path has a string literal or comment spanning a record " +
+            "boundary; falling back to the single-reader streaming parse")
+        None
+      } else {
+        val seen = mutable.Set.empty[String]
+        Some(found.toSeq.flatMap(declareNew(d, _, seen)))
       }
-  }
+    }
 
-  private def openReader(spark: SparkSession, path: String): BufferedReader = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    ZstdJniCodec.register(conf) // private copy — never mutate the shared conf
-    val fs = p.getFileSystem(conf)
-    // Hadoop's codec factory keys on the extension, so `.sql.gz` dumps —
-    // the form mysqldump output actually ships in — stream-decompress
-    // through the same statement scanner. (The distributed path gets the
-    // same behavior from TextInputFormat: a gzip member is one
-    // non-splittable split, decoded by the record reader.)
-    val raw = fs.open(p)
-    val codec = new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
-      .getCodec(p)
-    val in: java.io.InputStream =
+    /** The tables `ddl` declares that `seen` does not hold yet, added to
+      * it: a repeated name keeps its first schema. */
+    private def declareNew(d: Dialect, ddl: String, seen: mutable.Set[String]): Seq[TableDef] =
+      d.declare(ddl, seen).filter(td => seen.add(td.name))
+
+    /** Constant-memory driver-side single pass (fixes the reference's
+      * double whole-file read): tables are declared as their DDL streams
+      * by (both formats emit a table's DDL before its rows) and the
+      * selected tables' rows are typed on the fly. */
+    private def streaming(d: Dialect, spark: SparkSession, path: String,
+                          select: String => Boolean): Map[String, DataFrame] = {
+      val seen = mutable.Set.empty[String]
+      val index = mutable.Map.empty[String, (Int, StructType)]
+      val rows = ArrayBuffer.empty[ArrayBuffer[Row]]
+      val in = open(spark, path)
+      try d.streamUnits(in).foreach { u =>
+        d.ddl(u).foreach(declareNew(d, _, seen).filter(td => select(td.name)).foreach { td =>
+          index(td.name) = (rows.size, td.schema)
+          rows += ArrayBuffer.empty[Row]
+        })
+        d.decode(u, index).foreach { case (i, r) => rows(i) ++= r.get }
+      } finally in.close()
+      index.map { case (name, (i, schema)) =>
+        name -> spark.createDataFrame(spark.sparkContext.parallelize(rows(i).toSeq), schema)
+      }.toMap
+    }
+
+    /** The dump's units: Hadoop records on the dialect's delimiter, each
+      * split into units by the dialect. */
+    private def unitsRdd(d: Dialect, spark: SparkSession, path: String): RDD[String] = {
+      val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+      conf.set("textinputformat.record.delimiter", d.delimiter)
+      // `.zst` dumps decode through the zstd-jni-backed codec (Hadoop's
+      // own ZStandardCodec needs a native libhadoop this image lacks)
+      ZstdJniCodec.register(conf)
+      spark.sparkContext
+        .newAPIHadoopFile(path, classOf[TextInputFormat], classOf[LongWritable], classOf[Text], conf)
+        .flatMap(r => d.units(r._2.toString))
+    }
+
+    /** The whole dump as one decompressed stream. Hadoop's codec factory
+      * keys on the extension, so `.sql.gz` dumps — the form dumps actually
+      * ship in — stream-decompress like the distributed read, where a gzip
+      * member is one non-splittable split decoded by the record reader. */
+    private def open(spark: SparkSession, path: String): InputStream = {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+      ZstdJniCodec.register(conf) // private copy — never mutate the shared conf
+      val raw = p.getFileSystem(conf).open(p)
+      val codec = new CompressionCodecFactory(conf).getCodec(p)
       if (codec != null) codec.createInputStream(raw) else raw
-    new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
+    }
+
+    /** The records of a stream split on `delimiter`, as Hadoop's record
+      * reader splits a file, for a dialect whose units are its records. */
+    def records(in: InputStream, delimiter: String): Iterator[String] = {
+      val reader = new LineReader(in, delimiter.getBytes(StandardCharsets.UTF_8))
+      val record = new Text
+      Iterator.continually(reader.readLine(record)).takeWhile(_ > 0).map(_ => record.toString)
+    }
   }
 }

@@ -12,14 +12,15 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ConversionJob.JobConfig
 import graft.sinks.OrcSink
-import graft.sources.SqlDumpSource
+import graft.sources.{PgDumpFixture, SqlDumpSource}
 
-/** A dump conversion (`Cli.run(dump …)`) reads and decodes the dump once
-  * for all its tables: one discovery job, one decode job whose per-table
-  * row counts are the progress totals (no count pass), one write per
-  * table. The decoded rows are pinned for the conversion only, recover
-  * from lineage when their blocks are lost, and a table whose rows fail to
-  * decode or write fails alone. */
+/** A dump conversion (`Cli.run(dump …)` for a mysqldump, `Cli.run(pgdump
+  * …)` for a pg_dump) reads and decodes the dump once for all its tables:
+  * one discovery job, one decode job whose per-table row counts are the
+  * progress totals (no count pass), one write per table. The decoded rows
+  * are pinned for the conversion only, recover from lineage when their
+  * blocks are lost, and a table whose rows fail to decode or write fails
+  * alone. */
 class DumpConversionSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   private def sc = spark.sparkContext
@@ -65,6 +66,31 @@ class DumpConversionSpec extends AnyFunSuite with SparkSessionTestWrapper {
     Files.write(Paths.get(path), sb.toString.getBytes(StandardCharsets.UTF_8))
     Files.size(Paths.get(path))
   }
+
+  private val PgCreates = Map(
+    "items" -> "CREATE TABLE public.items (\n    id integer NOT NULL,\n    name character varying(64),\n    price numeric(12,2)\n);",
+    "events" -> "CREATE TABLE public.events (\n    id integer NOT NULL,\n    day date\n);",
+    "notes" -> "CREATE TABLE public.notes (\n    id integer NOT NULL,\n    note text\n);")
+
+  /** pg_dump-shaped file of the same rows: per table a CREATE, then one
+    * COPY block. */
+  private def writePgDump(path: String, extra: String): Long = {
+    val sb = new StringBuilder("--\n-- PostgreSQL database dump\n--\nSET client_encoding = 'UTF8';\n\n")
+    Seq("items", "events", "notes").foreach { t =>
+      sb ++= PgCreates(t) ++= s"\n\nCOPY public.$t FROM stdin;\n"
+      expected(t).toSeq.sortBy(_.head.toInt).foreach { row =>
+        sb ++= row.map(c => if (c == null) "\\N" else PgDumpFixture.escapeCopy(c)).mkString("\t") += '\n'
+      }
+      sb ++= "\\.\n\n"
+    }
+    sb ++= extra
+    Files.write(Paths.get(path), sb.toString.getBytes(StandardCharsets.UTF_8))
+    Files.size(Paths.get(path))
+  }
+
+  /** Each dialect's subcommand and dump writer. */
+  private val Dialects: Seq[(String, (String, String) => Long)] =
+    Seq("dump" -> (writeDump _), "pgdump" -> (writePgDump _))
 
   private def written(dir: String): Set[Seq[String]] =
     OrcSink.read(spark, dir).collect().map(_.toSeq.map {
@@ -114,6 +140,19 @@ class DumpConversionSpec extends AnyFunSuite with SparkSessionTestWrapper {
     try body finally sc.hadoopConfiguration.unset(key)
   }
 
+  /** Bytes the record readers of splits of `split` bytes read before
+    * their first record: a split that starts inside a record scans to the
+    * record's end and drops it, as the split before reads it whole. A
+    * pg_dump's COPY block is one record, so a block crossing a split start
+    * is read in part once more from there. */
+  private def skipScan(path: String, delimiter: String, split: Long): Long = {
+    val text = new String(Files.readAllBytes(Paths.get(path)), StandardCharsets.ISO_8859_1)
+    (split until text.length by split).map { start =>
+      val end = text.indexOf(delimiter, start.toInt)
+      (if (end < 0) text.length else end + delimiter.length) - start
+    }.sum
+  }
+
   /** Set an environment variable of this JVM for the length of `body`:
     * a conversion reads GRAFT_RESUME from the environment. */
   private def withEnv[T](key: String, value: String)(body: => T): T = {
@@ -133,62 +172,80 @@ class DumpConversionSpec extends AnyFunSuite with SparkSessionTestWrapper {
   // ---- specs --------------------------------------------------------------
 
   test("a multi-split dump converts from one read: no count job, no pin left") {
-    val before = pinned()
-    val dir = tmp("dumpconv-once")
-    val size = writeDump(s"$dir/d.sql")
-    val out = s"$dir/out"
-    val (rep, log) = withEnv("GRAFT_LOG_FILE", s"$dir/convert.log")(withSplits(size / 3 + 1)(
-      observe(Cli.run(spark, Seq("dump", s"$dir/d.sql", out, "snappy", "all")))))
-    val r = rep.get
-    assert(r.successes == 3 && r.total == 3, r)
-    Rows.foreach { case (t, n) =>
-      val res = r.results.find(_.table == t).get
-      assert(res.rows == n && res.attempts == 1, res)
-      assert(written(s"$out/$t") == expected(t), t)
+    for ((cmd, write) <- Dialects) {
+      val before = pinned()
+      val dir = tmp("dumpconv-once")
+      val size = write(s"$dir/d.sql", "")
+      val out = s"$dir/out"
+      val (rep, log) = withEnv("GRAFT_LOG_FILE", s"$dir/convert.log")(withSplits(size / 3 + 1)(
+        observe(Cli.run(spark, Seq(cmd, s"$dir/d.sql", out, "snappy", "all")))))
+      val r = rep.get
+      assert(r.successes == 3 && r.total == 3, r)
+      Rows.foreach { case (t, n) =>
+        val res = r.results.find(_.table == t).get
+        assert(res.rows == n && res.attempts == 1, res)
+        assert(written(s"$out/$t") == expected(t), s"$cmd $t")
+      }
+      val reread = if (cmd == "pgdump") skipScan(s"$dir/d.sql", "\n\\.\n", size / 3 + 1) else 0L
+      assert(log.fileBytes <= 1.2 * size + reread,
+        s"$cmd read ${log.fileBytes} bytes of a $size-byte dump, $reread of them re-read")
+      // the decode job's counts are the progress denominators
+      val lines = Files.readString(Paths.get(s"$dir/convert.log"))
+      assert(lines.contains("Progress items: 40,000/40,000 rows"), lines)
+      assert(lines.contains("Export completed: 3/3 tables successful"), lines)
+      assert(!log.jobs.exists(_.startsWith("graft.ConversionJob")), log.jobs)
+      // discovery, decode, one write per table
+      assert(log.jobs.size == 2 + Rows.size, log.jobs)
+      assert(pinned() == before, cmd)
     }
-    assert(log.fileBytes <= 1.2 * size, s"read ${log.fileBytes} bytes of a $size-byte dump")
-    // the decode job's counts are the progress denominators
-    val lines = Files.readString(Paths.get(s"$dir/convert.log"))
-    assert(lines.contains("Progress items: 40,000/40,000 rows"), lines)
-    assert(lines.contains("Export completed: 3/3 tables successful"), lines)
-    assert(!log.jobs.exists(_.startsWith("graft.ConversionJob")), log.jobs)
-    // discovery, decode, one write per table
-    assert(log.jobs.size == 2 + Rows.size, log.jobs)
-    assert(pinned() == before)
   }
 
   test("a table that fails to decode or to write fails alone; no pin is left") {
-    val before = pinned()
-    val dir = tmp("dumpconv-fail")
     // bad_cast: a non-numeric INT cell; bad_hex: a malformed hex literal;
     // bad_write: NULL in a NOT NULL column, which the ORC write rejects
-    val extra =
-      """CREATE TABLE `bad_cast` (`id` INT, `v` VARCHAR(8));
-        |INSERT INTO `bad_cast` VALUES (1,'a'),(2,'b');
-        |INSERT INTO `bad_cast` VALUES ('abc','c');
-        |CREATE TABLE `bad_hex` (`id` INT, `b` BLOB);
-        |INSERT INTO `bad_hex` VALUES (1,X'zz');
-        |CREATE TABLE `bad_write` (`id` INT NOT NULL);
-        |INSERT INTO `bad_write` VALUES (1),(NULL);
-        |""".stripMargin
-    writeDump(s"$dir/d.sql", extra)
-    val out = s"$dir/out"
-    val r = withSplits(256L << 10)(
-      Cli.run(spark, Seq("dump", s"$dir/d.sql", out, "snappy", "all"))).get
-    val byTable = r.results.map(x => x.table -> x).toMap
-    assert(r.total == 6 && r.successes == 3, r)
-    Rows.keys.foreach { t =>
-      assert(byTable(t).success, byTable(t))
-      assert(written(s"$out/$t") == expected(t), t)
+    val extra = Map(
+      "dump" ->
+        """CREATE TABLE `bad_cast` (`id` INT, `v` VARCHAR(8));
+          |INSERT INTO `bad_cast` VALUES (1,'a'),(2,'b');
+          |INSERT INTO `bad_cast` VALUES ('abc','c');
+          |CREATE TABLE `bad_hex` (`id` INT, `b` BLOB);
+          |INSERT INTO `bad_hex` VALUES (1,X'zz');
+          |CREATE TABLE `bad_write` (`id` INT NOT NULL);
+          |INSERT INTO `bad_write` VALUES (1),(NULL);
+          |""".stripMargin,
+      "pgdump" ->
+        """CREATE TABLE public.bad_cast (id integer, v text);
+          |COPY public.bad_cast (id, v) FROM stdin;
+          |1	a
+          |abc	c
+          |\.
+          |""".stripMargin)
+    for ((cmd, write) <- Dialects) {
+      val before = pinned()
+      val dir = tmp("dumpconv-fail")
+      write(s"$dir/d.sql", extra(cmd))
+      val out = s"$dir/out"
+      val r = withSplits(256L << 10)(
+        Cli.run(spark, Seq(cmd, s"$dir/d.sql", out, "snappy", "all"))).get
+      val byTable = r.results.map(x => x.table -> x).toMap
+      val failed = byTable.keySet -- Rows.keySet
+      assert(r.total == 3 + failed.size && r.successes == 3, r)
+      Rows.keys.foreach { t =>
+        assert(byTable(t).success, byTable(t))
+        assert(written(s"$out/$t") == expected(t), s"$cmd $t")
+      }
+      assert(!byTable("bad_cast").success)
+      assert(byTable("bad_cast").error.exists(
+        _.contains("java.lang.NumberFormatException: For input string: \"abc\"")), byTable("bad_cast"))
+      if (cmd == "dump") {
+        assert(!byTable("bad_hex").success)
+        assert(byTable("bad_hex").error.exists(
+          _.contains("malformed hex literal X'zz': non-hex digit in 'zz'")), byTable("bad_hex"))
+        assert(!byTable("bad_write").success, byTable("bad_write"))
+        assert(r.total == 6, r)
+      }
+      assert(pinned() == before, cmd)
     }
-    assert(!byTable("bad_cast").success)
-    assert(byTable("bad_cast").error.exists(
-      _.contains("java.lang.NumberFormatException: For input string: \"abc\"")), byTable("bad_cast"))
-    assert(!byTable("bad_hex").success)
-    assert(byTable("bad_hex").error.exists(
-      _.contains("malformed hex literal X'zz': non-hex digit in 'zz'")), byTable("bad_hex"))
-    assert(!byTable("bad_write").success, byTable("bad_write"))
-    assert(pinned() == before)
   }
 
   test("resume with every table verified runs no decode job") {

@@ -11,8 +11,8 @@ import graft.sources.{PgDumpFixture, PgDumpSource}
 /** pg_dump dialect: typed DDL parse, COPY TEXT-format unescaping,
   * NULL-vs-empty, column-list mapping, multi-table selection, the
   * data-line-that-looks-like-SQL trap, record-delimiter safety around
-  * trailing backslashes, empty tables, gz, and distributed == streaming
-  * equality on every case. */
+  * trailing backslashes, empty tables, gz and zst, and distributed ==
+  * streaming equality on every case. */
 class PgDumpSourceSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   import spark.implicits._
@@ -132,10 +132,12 @@ class PgDumpSourceSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   test("gzipped dump parses identically in both modes") {
     val df = Seq((1L, "alpha"), (2L, "beta")).toDF("id", "name")
-    val f = Files.createTempFile("pgdump", ".sql.gz")
-    PgDumpFixture.writeDump(df, "gz", f.toString)
-    val got = bothModes(f.toString)("gz").orderBy("id").collect()
-    assert(got.map(_.getString(1)).toSeq === Seq("alpha", "beta"))
+    for (ext <- Seq(".sql.gz", ".sql.zst")) {
+      val f = Files.createTempFile("pgdump", ext)
+      PgDumpFixture.writeDump(df, "gz", f.toString)
+      val got = bothModes(f.toString)("gz").orderBy("id").collect()
+      assert(got.map(_.getString(1)).toSeq === Seq("alpha", "beta"), ext)
+    }
   }
 
   test("DDL breadth: quoted identifiers, modifiers, unknown types, constraints skipped") {
@@ -196,8 +198,12 @@ class PgDumpSourceSpec extends AnyFunSuite with SparkSessionTestWrapper {
         |1
         |\.
         |""".stripMargin
-    intercept[IllegalArgumentException] {
-      PgDumpSource.parse(spark, writeTemp(dump), distributed = false)
+    val path = writeTemp(dump)
+    for (distributed <- Seq(true, false)) {
+      val e = intercept[IllegalArgumentException] {
+        PgDumpSource.parse(spark, path, distributed = distributed)
+      }
+      assert(e.getMessage.contains("COPY data for table 'orphan'"), s"distributed=$distributed")
     }
   }
 }
