@@ -1,7 +1,8 @@
 #!/bin/bash
 # Run a graft main directly against the compiled classes (no sbt lock).
 # Usage: scripts/run_main.sh graft.Bench [args...]
-# Env mirrors the sbt runMain path (build.sbt javaOptions).
+# Env mirrors the sbt runMain path (build.sbt javaOptions); the session
+# settings come from graft.GraftSession.
 set -u
 MAIN="$1"; shift
 exec java \
@@ -18,8 +19,6 @@ exec java \
   --add-opens java.base/sun.nio.cs=ALL-UNNAMED \
   --add-opens java.base/sun.security.action=ALL-UNNAMED \
   --add-opens java.base/sun.util.calendar=ALL-UNNAMED \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
   "$MAIN" "$@"

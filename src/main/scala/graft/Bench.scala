@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"errors":{...},"sf":...}
   *
   * Runs the headline queries (SparkEntry.benchQueries) against
-  * SPARK_GRAFT_SF_DIR on local[32] with AQE enabled — the same session
-  * shape a production cluster job would use, minus the cluster manager.
+  * SPARK_GRAFT_SF_DIR in a [[GraftSession]] (local[SPARK_GRAFT_CPUS] with
+  * AQE on by default) — the same session shape a production cluster job
+  * would use, minus the cluster manager.
   *
   * Failures are LOUD: a query that throws is recorded under "errors"
   * (and counted in "n_errors") instead of silently contributing a
@@ -39,7 +40,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Drift gate (r19: VERDICT r18 #9): the r17->r18 driver runs swung
     // 1.5-1.6x on IDENTICAL code because the run started on a contended
     // host. Wait (bounded) for EXTERNAL load to settle before doing any
@@ -64,14 +64,7 @@ object Bench {
         Thread.sleep(5000); l = l1
       }
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     // bench mode marker: streaming probes whose gate fixture exists to
     // exercise cross-batch laws switch to ONE deployment-sized batch here

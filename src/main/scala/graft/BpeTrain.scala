@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI utility: learn a BPE merges table from a parquet corpus and print
   * it (rank order, tab-separated) — the tool a user runs once per corpus
   * to produce the pinned table [[graft.functions.BpeEncode]] applies.
@@ -13,11 +11,7 @@ object BpeTrain {
     val path = if (args.length > 0) args(0) else "/root/testdata/sf0.01/documents.parquet"
     val textCol = if (args.length > 1) args(1) else "text"
     val numMerges = if (args.length > 2) args(2).toInt else 48
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("graft-bpe-train")
     spark.sparkContext.setLogLevel("ERROR")
     val merges = operators.BpeLearner.learnMerges(
       spark.read.parquet(path), textCol, numMerges)

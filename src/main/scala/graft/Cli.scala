@@ -23,14 +23,7 @@ import graft.ConversionJob.{JobConfig, JobReport}
 object Cli {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("universal-data-to-orc")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = GraftSession("universal-data-to-orc")
     spark.sparkContext.setLogLevel("WARN")
     // No args = interactive session, like the reference's `./data_to_orc_
     // converter.sh` prompt flow (sh:84-173).

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.expr
 
 /** Write-side ORC tuning sweep (VERDICT r4 item 8): writes the sf0.1
@@ -15,12 +14,7 @@ import org.apache.spark.sql.functions.expr
 object CodecSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("graft-codec-sweep")
     spark.sparkContext.setLogLevel("ERROR")
 
     val df = spark.read.parquet(s"$sfDir/lineitem.parquet").cache()

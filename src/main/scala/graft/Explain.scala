@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: prints `explain("formatted")` for selected queries so
   * pushdown (PushedFilters/ReadSchema), join strategies (broadcast vs
   * shuffle), and WholeStageCodegen spans can be inspected per round.
@@ -94,13 +92,7 @@ object Explain {
         "pipeline_curate_v2", "text_vocab_coverage", "emb_bitext_margin_engine",
         "text_collocations", "text_lang_confusion", "emb_dim_stats",
         "emb_whitening")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

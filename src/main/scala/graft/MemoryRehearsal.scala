@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Constrained-heap child of [[ScaleRehearsal]] (VERDICT r10 item 4):
@@ -10,12 +8,12 @@ import org.apache.spark.sql.functions._
   * unchanged. SCALING.md's MEMORY_AND_DISK claim, measured.
   *
   * Run in a JVM whose -Xmx is deliberately small for the probe set (the
-  * parent forks `java -Xmx<heapMb>m`): Spark's unified memory manager
-  * then forces the hash aggregations (the span family's distinct
-  * (doc, window-hash) table is the big one — tens of millions of rows at
-  * sf1) to fall back to sort-based spilling, which the task metrics
-  * surface as memoryBytesSpilled/diskBytesSpilled. Emits ONE JSON line
-  * on stdout and to args(1):
+  * parent forks `java -Xmx<heapMb>m` with `SPARK_GRAFT_CPUS=8`): Spark's
+  * unified memory manager then forces the hash aggregations (the span
+  * family's distinct (doc, window-hash) table is the big one — tens of
+  * millions of rows at sf1) to fall back to sort-based spilling, which
+  * the task metrics surface as memoryBytesSpilled/diskBytesSpilled.
+  * Emits ONE JSON line on stdout and to args(1):
   * {"heap_mb":N,"completed":true,"probes":{name:{rows,secs,spill_mem_mb,
   * spill_disk_mb}},"spill_disk_mb_total":N}
   *
@@ -24,39 +22,23 @@ import org.apache.spark.sql.functions._
   * its own unconstrained runs. */
 object MemoryRehearsal {
 
-  private final class SpillMeter extends SparkListener {
-    val mem = new java.util.concurrent.atomic.AtomicLong(0)
-    val disk = new java.util.concurrent.atomic.AtomicLong(0)
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      mem.addAndGet(s.stageInfo.taskMetrics.memoryBytesSpilled)
-      disk.addAndGet(s.stageInfo.taskMetrics.diskBytesSpilled)
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sf1")
     val outPath = args.lift(1).getOrElse("/tmp/memory_rehearsal.json")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the memory-constrained posture: broadcast-hash builds hold the
-      // whole build side on-heap and ABORT when it doesn't fit
-      // (notEnoughMemoryToBuildAndBroadcastTableError — measured flaky
-      // at this heap), while sort-merge paths spill gracefully. An
-      // undersized deployment disables broadcast for exactly this
-      // reason, and it also maximizes the spill pressure this gate
-      // exists to exercise.
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
+    // the memory-constrained posture: broadcast-hash builds hold the
+    // whole build side on-heap and ABORT when it doesn't fit
+    // (notEnoughMemoryToBuildAndBroadcastTableError — measured flaky
+    // at this heap), while sort-merge paths spill gracefully. An
+    // undersized deployment disables broadcast for exactly this
+    // reason, and it also maximizes the spill pressure this gate
+    // exists to exercise.
+    val spark = GraftSession("graft-memory-rehearsal",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     spark.sparkContext.setLogLevel("WARN")
     import graft.Tables.t
     import graft.operators.{Dedup, Similarity}
 
-    val meter = new SpillMeter
-    spark.sparkContext.addSparkListener(meter)
+    val meter = StageMeter.attach(spark.sparkContext)
 
     val probes: Seq[(String, () => Long)] = Seq(
       "dedup_minhash_full" -> (() =>
@@ -75,12 +57,11 @@ object MemoryRehearsal {
 
     val heapMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
     val rows = probes.map { case (name, fn) =>
-      meter.mem.set(0); meter.disk.set(0)
-      val t0 = System.nanoTime()
-      val n = fn()
-      val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // listener bus drain
-      (name, n, secs, meter.mem.get / 1e6, meter.disk.get / 1e6)
+      val ((n, secs), r) = meter.measure {
+        val t0 = System.nanoTime()
+        (fn(), (System.nanoTime() - t0) / 1e9)
+      }
+      (name, n, secs, r.spillMemBytes / 1e6, r.spillDiskBytes / 1e6)
     }
     val probesJson = rows.map { case (name, n, secs, sm, sd) =>
       f""""$name": {"rows": $n%d, "secs": $secs%.2f, "spill_mem_mb": $sm%.1f, "spill_disk_mb": $sd%.1f}"""

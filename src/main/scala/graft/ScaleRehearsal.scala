@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Standing per-round scale gate (VERDICT r4 item 1): synthesizes a 10x
@@ -52,24 +51,11 @@ import org.apache.spark.sql.functions._
   * stdout; the JSON file carries the ratios, ceilings and verdicts. */
 object ScaleRehearsal {
 
-  /** Accumulates shuffle write bytes across all stages. */
-  private final class ShuffleMeter extends SparkListener {
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0)
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-      bytes.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-  }
-
   private final case class Sample(rows: Long, secs: Double, shuffleMB: Double)
 
   def main(args: Array[String]): Unit = {
     val outPath = args.headOption.getOrElse("SCALE_r07.json")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("graft-scale-rehearsal")
     spark.sparkContext.setLogLevel("WARN")
     import graft.Tables.t
 
@@ -877,16 +863,14 @@ object ScaleRehearsal {
           "embedding", threshold = 0.9).count())
     )
 
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
+    val meter = StageMeter.attach(spark.sparkContext)
     def measure(d: String, name: String, fn: () => Long): Sample = {
       System.gc()
-      meter.bytes.set(0)
-      val t0 = System.nanoTime()
-      val rows = fn()
-      val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // listener bus drain
-      val mb = meter.bytes.get / 1e6
+      val ((rows, secs), r) = meter.measure {
+        val t0 = System.nanoTime()
+        (fn(), (System.nanoTime() - t0) / 1e9)
+      }
+      val mb = r.shuffleWriteBytes / 1e6
       println(f"SCALE $d $name rows=$rows%d secs=$secs%.2f shuffleMB=$mb%.1f")
       Sample(rows, secs, mb)
     }
@@ -1571,7 +1555,11 @@ object ScaleRehearsal {
       "graft.MemoryRehearsal", sf1, memOut)
     def runMemChild(): (Int, String, String) = {
       new java.io.File(memOut).delete()
-      val p = new ProcessBuilder(memCmd: _*).redirectErrorStream(true).start()
+      // the memory-constrained child keeps its 8 cores whatever this
+      // JVM's width
+      val pb = new ProcessBuilder(memCmd: _*).redirectErrorStream(true)
+      pb.environment().put("SPARK_GRAFT_CPUS", "8")
+      val p = pb.start()
       val log = scala.io.Source.fromInputStream(
         p.getInputStream).mkString // drain first: child can block on a full pipe
       val exit = p.waitFor()

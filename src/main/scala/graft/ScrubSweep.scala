@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off measurement main (the [[CodecSweep]] pattern): Aho-Corasick
@@ -15,12 +14,7 @@ import org.apache.spark.sql.functions._
 object ScrubSweep {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("graft-scrub-sweep")
     spark.sparkContext.setLogLevel("WARN")
 
     val vocab = Seq("key", "agg", "row", "scan", "slow", "fast", "table",

@@ -206,7 +206,7 @@ object Dedup {
     // (id, sig) frame here — so both self-join sides read it instead of
     // re-running the signature expression — won 1.14-1.21x at sf0.1 but
     // made the SCALE sf10 rung BIMODAL: 5-18 s (faster than unpinned)
-    // in some runs, 68-148 s in others (fresh-JVM ProbeOnce repro: one
+    // in some runs, 68-148 s in others (fresh-JVM single-probe repro: one
     // straggler task doing the whole candidate aggregate while 31 cores
     // idle; unpinned code is stable 16-23 s). A skew-threshold coin
     // flip this operator cannot control is worse than the saved pass —

@@ -3,7 +3,7 @@ package graft.sinks
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{broadcast, col, lit}
 import org.apache.spark.sql.types._
 
 import graft.sinks.SnapshotTable.{ColStats, FileEntry, u8gt, u8lt, sargSafeString}
@@ -14,8 +14,8 @@ import graft.sinks.SnapshotTable.{ColStats, FileEntry, u8gt, u8lt, sargSafeStrin
   * Spark's UTF8String both use, see [[SnapshotTable.u8cmp]]). Every range
   * rule the snapshot table applies to manifest stats is stated here once
   * for both domains: scan pruning, copy-on-write deletes, rebase proofs,
-  * the pushed-filter pruning of the DSv2 source and the metadata-only SQL
-  * DELETE. Bounds are inclusive. */
+  * the pushed-filter pruning of the DSv2 source, the metadata-only SQL
+  * DELETE and merge's file stabbing. Bounds are inclusive. */
 sealed trait KeyRange extends Product with Serializable {
   protected type K
   /** This domain's [min, max] of a file's non-null keys, if recorded. */
@@ -61,6 +61,47 @@ sealed trait KeyRange extends Product with Serializable {
 }
 
 object KeyRange {
+
+  /** The range of keys a file's stats record, in the domain they carry
+    * (a column carries numeric OR string stats, never both — drift fails
+    * loudly at commit); None without stats in either. */
+  def of(s: ColStats): Option[KeyRange] = s match {
+    case ColStats(Some(mn), Some(mx), _, _, _) => Some(Num(mn, mx))
+    case ColStats(None, None, Some(mn), Some(mx), _) => Some(Utf8(mn, mx))
+    case _ => None
+  }
+
+  /** Paths of the `files` that may hold a value of `keys`' column
+    * `keyCol`: exact stabbing, not a bounding box (one key far outside
+    * the table's range would otherwise take every file). The distinct
+    * keys range-join the broadcast ranges of the files' stats, both
+    * domains in one join: a key stabs a numeric range through
+    * `try_cast(key as double)`, so a key that cannot be cast stabs
+    * nothing instead of failing under ANSI, and a string range through
+    * its string form, compared in UTF-8 byte order as the footers are.
+    * Files without stats on the key are always in the set. The collect
+    * is bounded by #files. */
+  def stabbed(keys: DataFrame, keyCol: String, files: Seq[FileEntry]): Set[String] = {
+    val ranged = files.flatMap(e =>
+      e.stats.get(keyCol).flatMap(of).map(e.path -> _))
+    val statless = files.map(_.path).toSet -- ranged.map(_._1)
+    if (ranged.isEmpty) statless
+    else {
+      val spark = keys.sparkSession
+      import spark.implicits._
+      val table = ranged.map {
+        case (p, Num(lo, hi)) => (p, Some(lo), Some(hi), None, None)
+        case (p, Utf8(lo, hi)) => (p, None, None, lo, hi)
+      }.toDF("_path", "_nlo", "_nhi", "_slo", "_shi")
+      val k = keys.select(col(keyCol).try_cast("double").as("_kn"),
+        col(keyCol).cast("string").as("_ks")).distinct()
+      statless ++ k.join(broadcast(table),
+          (col("_kn") >= col("_nlo") && col("_kn") <= col("_nhi")) ||
+            (col("_ks") >= col("_slo") && col("_ks") <= col("_shi")))
+        .select(col("_path")).distinct()
+        .collect().map(_.getString(0))
+    }
+  }
 
   /** Numeric range; an open side is ±Infinity. */
   final case class Num(lo: Double, hi: Double) extends KeyRange {

@@ -2021,47 +2021,8 @@ object SnapshotTable {
       throw new IllegalArgumentException(s"no snapshot table at $dir"))
     val readSchema = snapshotSchema(spark, dir, Some(readVersion))
     val files = snapshotFiles(spark, dir, Some(readVersion))
-    // exact file stabbing, not a bounding box (a single inserted key far
-    // outside the table's range would otherwise force a full rewrite):
-    // update keys range-join the broadcast #files-row manifest ranges;
-    // the collect is bounded by #files
-    import spark.implicits._
-    val ranged = files.flatMap { e =>
-      e.stats.get(keyCol).collect {
-        case ColStats(Some(mn), Some(mx), _, _, _) => (e.path, mn, mx)
-      }
-    }
-    // string-keyed tables stab off the minStr/maxStr channel instead of
-    // degrading to a full-table rewrite (a column carries numeric OR
-    // string stats, never both — drift fails loudly at commit)
-    val rangedStr = files.flatMap { e =>
-      e.stats.get(keyCol).collect {
-        case ColStats(None, None, Some(mn), Some(mx), _) => (e.path, mn, mx)
-      }
-    }
-    val statless = files.filterNot(e =>
-      ranged.exists(_._1 == e.path) || rangedStr.exists(_._1 == e.path))
-      .map(_.path).toSet
-    // try_cast: non-numeric update keys stab nothing (their files carry
-    // no numeric stats and are stabbed via string stats or rewritten via
-    // the statless path) instead of failing the whole merge under ANSI
-    val stabbedNum: Set[String] =
-      if (ranged.isEmpty) Set.empty
-      else updates.select(col(keyCol).try_cast("double").as("_k")).distinct()
-        .join(broadcast(ranged.toDF("_path", "_mn", "_mx")),
-          col("_k") >= col("_mn") && col("_k") <= col("_mx"))
-        .select(col("_path")).distinct()
-        .collect().map(_.getString(0)).toSet
-    val stabbedStr: Set[String] =
-      if (rangedStr.isEmpty) Set.empty
-      else updates.select(col(keyCol).cast("string").as("_k")).distinct()
-        .join(broadcast(rangedStr.toDF("_path", "_mn", "_mx")),
-          col("_k") >= col("_mn") && col("_k") <= col("_mx"))
-        .select(col("_path")).distinct()
-        .collect().map(_.getString(0)).toSet
-    val stabbed: Set[String] = stabbedNum ++ stabbedStr
-    val (touched, carried) = files.partition(e =>
-      stabbed.contains(e.path) || statless.contains(e.path))
+    val stabbed = KeyRange.stabbed(updates, keyCol, files)
+    val (touched, carried) = files.partition(e => stabbed.contains(e.path))
     // upsert = (touched rows minus updated keys) + all updates; pending
     // MOR deletes apply to the touched read (no resurrection) and carry
     // for the untouched files

@@ -83,7 +83,7 @@ object PgDumpSource {
       Ident + """)\s*\((.*)\)[^)]*$""").r
 
   /** Parse a Postgres CREATE TABLE statement into a typed TableDef.
-    * Column entries keep name + type; table-level constraint entries
+    * Column entries keep name, type and `NOT NULL`; table-level constraint entries
     * (PRIMARY KEY / UNIQUE / CHECK / CONSTRAINT / FOREIGN KEY / LIKE /
     * EXCLUDE) are skipped, like the mysqldump parser. */
   def parseCreateTable(stmt: String): Option[TableDef] = stmt match {
@@ -122,8 +122,9 @@ object PgDumpSource {
             if (i < 0) rest.length else i
           }).min
           val typeStr = rest.substring(0, cutAt).trim
+          val nullable = !restUp.substring(cutAt).contains(" NOT NULL")
           if (typeStr.isEmpty) None
-          else Some(StructField(name, pgTypeToSpark(typeStr)))
+          else Some(StructField(name, pgTypeToSpark(typeStr), nullable))
         }
       }
       if (fields.isEmpty) None

@@ -375,7 +375,8 @@ class SnapshotTableSpec extends AnyFunSuite with SparkSessionTestWrapper {
       // the answer stays exact through the fallback
       SnapshotTable.deleteByKeys(spark, dir, "id", Seq(3L).toDF("id"))
       assert(SnapshotTable.rowCount(spark, dir) === 124L)
-      // the pruned fast path carries pending deletes into the read
+      // the delete lands past the last checkpoint, so this scan takes
+      // the driver path, whose replay applies it
       val (p2, _, _) = SnapshotTable.scanPruned(spark, dir, "id", 0.0, 9.0)
       assert(p2.count() === 9)
       // and the driver path (threshold high) agrees exactly
@@ -393,36 +394,45 @@ class SnapshotTableSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   test("distributed manifest queries: a string range scan plans from " +
     "the sidecar on the executors and agrees with the driver path") {
+    // a numeric range scan on `id` takes the same path: both carry the
+    // pending delete inside the checkpoint into the read
     val dir = freshDir()
     def keyed(lo: Long, hi: Long) = (lo until hi)
       .map(i => (f"k$i%04d", i)).toDF("skey", "id")
     spark.conf.set("spark.graft.table.checkpoint.inlineMaxFiles", "1")
     spark.conf.set("spark.graft.table.checkpoint.distributedMinFiles", "1")
     try {
+      val stats = Seq("skey", "id")
       SnapshotTable.commit(spark, keyed(0, 10), dir, "overwrite",
-        statsCols = Seq("skey"))
+        statsCols = stats)
       (1 to 9).foreach(i =>
         SnapshotTable.commit(spark, keyed(i * 10, i * 10 + 10), dir,
-          "append", statsCols = Seq("skey")))
+          "append", statsCols = stats))
       // the pending delete lands at v10, inside the checkpoint; the
       // append-only tail past it is pruned driver-side
       SnapshotTable.deleteByKeys(spark, dir, "skey", Seq("k0003").toDF("skey"))
       SnapshotTable.commit(spark, keyed(100, 115), dir, "append",
-        statsCols = Seq("skey"))
-      val range = KeyRange.Utf8("k0000", "k0009")
-      val before = SnapshotTable.distributedReplays.get()
-      val (pruned, kept, total) =
-        SnapshotTable.scanPruned(spark, dir, "skey", range)
-      assert(SnapshotTable.distributedReplays.get() > before,
-        "expected the executor-side sidecar planning to engage")
-      assert(kept < total)
-      assert(total === SnapshotTable.snapshotFiles(spark, dir).size)
-      val rows = pruned.count()
-      assert(rows === 9)
+        statsCols = stats)
+      val scans = Seq("skey" -> KeyRange.Utf8("k0000", "k0009"),
+        "id" -> KeyRange.Num(0, 9))
+      val fast = scans.map { case (column, range) =>
+        val before = SnapshotTable.distributedReplays.get()
+        val (pruned, kept, total) =
+          SnapshotTable.scanPruned(spark, dir, column, range)
+        assert(SnapshotTable.distributedReplays.get() > before,
+          s"expected the executor-side sidecar planning to engage on $column")
+        assert(kept < total)
+        assert(total === SnapshotTable.snapshotFiles(spark, dir).size)
+        val rows = pruned.count()
+        assert(rows === 9, column)
+        (rows, kept, total)
+      }
       spark.conf.set("spark.graft.table.checkpoint.distributedMinFiles",
         "1000000000")
-      val (p2, k2, t2) = SnapshotTable.scanPruned(spark, dir, "skey", range)
-      assert((p2.count(), k2, t2) === ((rows, kept, total)))
+      scans.zip(fast).foreach { case ((column, range), f) =>
+        val (p2, k2, t2) = SnapshotTable.scanPruned(spark, dir, column, range)
+        assert((p2.count(), k2, t2) === f, column)
+      }
     } finally {
       spark.conf.unset("spark.graft.table.checkpoint.inlineMaxFiles")
       spark.conf.unset("spark.graft.table.checkpoint.distributedMinFiles")

@@ -2,13 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (lazy, reused via getOrCreate). */
+/** One shared local session for all suites (lazy, reused via getOrCreate),
+  * 4 cores wide whatever the host so the suites keep their partitioning. */
 trait SparkSessionTestWrapper {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    GraftSession.of("graft-test", GraftSession.Shape("local[4]", 4))
 }

@@ -3,9 +3,6 @@ package org.apache.spark
 /** Engine internals that specs need and the public API does not expose. */
 object GraftTestHooks {
 
-  /** Wait until the listener bus has delivered every posted event. */
-  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
-
   /** Drop every cached block of an RDD while it stays marked persisted:
     * what losing the executors that held the blocks does to it. */
   def dropBlocks(sc: SparkContext, rddId: Int): Unit =
