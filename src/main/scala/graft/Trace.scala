@@ -4,7 +4,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Per-micro-batch wall breakdown printer, registered context-wide via
   * `spark.sql.streaming.streamingQueryListeners` (zero-arg constructor
-  * required) so queries on cloned sessions report too. */
+  * required) so queries on cloned sessions report too. Each line starts
+  * with the gate being traced ([[TraceListener.gate]]), then the stream's
+  * own name. */
 class TraceListener extends StreamingQueryListener {
   override def onQueryStarted(
       e: StreamingQueryListener.QueryStartedEvent): Unit = ()
@@ -17,7 +19,7 @@ class TraceListener extends StreamingQueryListener {
       s"op=${s.operatorName} rows=${s.numRowsTotal} " +
         s"commitMs=${s.commitTimeMs} memUsed=${s.memoryUsedBytes}")
       .mkString(" | ")
-    println(s"[batch] ${p.name} batch=${p.batchId} rows=${p.numInputRows} " +
+    println(s"[batch] ${TraceListener.gate} ${p.name} batch=${p.batchId} rows=${p.numInputRows} " +
       s"trigger=${ms("triggerExecution")} addBatch=${ms("addBatch")} " +
       s"getBatch=${ms("getBatch")} latestOffset=${ms("latestOffset")} " +
       s"walCommit=${ms("walCommit")} commitOffsets=${ms("commitOffsets")} " +
@@ -25,6 +27,12 @@ class TraceListener extends StreamingQueryListener {
   }
   override def onQueryTerminated(
       e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+}
+
+object TraceListener {
+  /** The gate whose batches are being reported; a listener Spark builds
+    * cannot see the job description, so the trace sets this instead. */
+  @volatile var gate = "?"
 }
 
 /** Job, stage and micro-batch trace of named queries: a warm pass, then a
@@ -61,6 +69,9 @@ object Trace {
     }
 
     names.foreach { n =>
+      // the traced pass's measure drains the bus before and after, so
+      // every batch of this gate is reported while its name is set
+      TraceListener.gate = n
       // warm pass (codegen/FS cache), then the traced pass
       try run(n) catch { case e: Throwable => println(s"[warm] $n failed: $e") }
       println(s"\n========== $n (traced pass) ==========")

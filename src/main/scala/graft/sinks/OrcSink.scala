@@ -120,60 +120,23 @@ object OrcSink {
   /** Cheap physical re-check for resume: the marker's part-file count
     * still matches the directory listing (no data read — metadata only).
     * Schema drift is the CALLER's check (against the current source). */
-  def markerHolds(spark: SparkSession, dir: String, m: SuccessMarker): Boolean = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return false
-    val it = fs.listFiles(p, true)
-    var orcFiles = 0
-    while (it.hasNext) if (it.next().getPath.getName.endsWith(".orc")) orcFiles += 1
-    orcFiles == m.files
-  }
+  def markerHolds(spark: SparkSession, dir: String, m: SuccessMarker): Boolean =
+    OrcFooters.partFiles(spark, dir).size == m.files
 
   /** Post-write verification (reference sh:556-566): output exists, has
-    * .orc part files, and reads back. Count comes from ORC metadata (no
-    * full scan).
-    *
-    * r19 (guide §6): below `spark.graft.orc.verify.driverMaxFiles`
-    * (default 256) the row count is the SUM OF FOOTER COUNTS read
-    * driver-side on the common pool — the exact same number a count()
-    * job returns (ORC footers are authoritative), each footer read also
-    * proving the file is complete, well-formed ORC; a Spark job's
-    * launch/schedule round-trip dwarfs that metadata I/O for
-    * protocol-sized outputs. Above the dial (production-scale tables)
-    * the count stays a distributed job. */
+    * .orc part files, and reads back. The row count is the sum of the
+    * part files' footer counts ([[OrcFooters]]: on the driver up to
+    * `OrcFooters.DriverMaxFiles` files, one footer-only job above). It is
+    * the number a count() job returns, since ORC footers are
+    * authoritative, and parsing every footer proves each file is
+    * complete, well-formed ORC. */
   def verify(spark: SparkSession, dir: String, table: String): WriteReport = {
     val p = new Path(dir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = p.getFileSystem(conf)
-    require(fs.exists(p), s"output dir missing: $dir")
-    // recursive: partitioned layouts nest part files under <col>=<val>/ dirs
-    val it = fs.listFiles(p, true)
-    val orcPaths = scala.collection.mutable.ArrayBuffer.empty[Path]
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".orc")) orcPaths += f.getPath
-    }
-    require(orcPaths.nonEmpty, s"no .orc part files in $dir")
-    val driverMax = spark.conf.getOption("spark.graft.orc.verify.driverMaxFiles")
-      .map(_.toInt).getOrElse(256)
-    val rows =
-      if (orcPaths.size <= driverMax) footerRowSum(conf, orcPaths.toSeq)
-      else spark.read.orc(dir).count()
-    WriteReport(table, dir, rows, orcPaths.size)
-  }
-
-  /** Exact row count from ORC footers, driver-side: footer reads are
-    * independent, so they overlap on the common pool (one footer latency
-    * for a protocol-sized file set, not their sum). */
-  private def footerRowSum(conf: org.apache.hadoop.conf.Configuration,
-                           paths: Seq[Path]): Long = {
-    import scala.jdk.CollectionConverters._
-    paths.asJava.parallelStream().mapToLong { p =>
-      val r = org.apache.orc.OrcFile.createReader(p,
-        org.apache.orc.OrcFile.readerOptions(conf))
-      try r.getNumberOfRows finally r.close()
-    }.sum()
+    require(p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p),
+      s"output dir missing: $dir")
+    val footers = OrcFooters.dirEntries(spark, dir)
+    require(footers.nonEmpty, s"no .orc part files in $dir")
+    WriteReport(table, dir, footers.map(_.rows).sum, footers.size)
   }
 
   /** Read a table directory back (README.md:189 contract: the directory IS
@@ -188,7 +151,8 @@ object OrcSink {
     spark.read.option("mergeSchema", true).orc(dir)
 
   /** Compact a table directory's small files: rewrite into
-    * ceil(totalBytes / targetFileBytes) parts (at least 1). The lakehouse
+    * ceil(totalBytes / targetFileBytes) parts (at least 1), totalBytes
+    * being the part files' lengths. The lakehouse
     * maintenance op for streaming/incremental sinks that accrete tiny
     * files — many-small-files kills scan planning and NameNode/listing at
     * scale. Crash-safe: the compacted copy is written to a temp sibling,
@@ -200,30 +164,18 @@ object OrcSink {
     require(targetFileBytes > 0)
     val codec = compression.toLowerCase
     require(SupportedCodecs.contains(codec), s"unsupported ORC codec: $compression")
-    val hconf = spark.sparkContext.hadoopConfiguration
     val p = new Path(dir)
-    val fs = p.getFileSystem(hconf)
-    val it = fs.listFiles(p, true)
-    var bytes = 0L
-    val beforePaths = scala.collection.mutable.ArrayBuffer.empty[Path]
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".orc")) { bytes += f.getLen; beforePaths += f.getPath }
-    }
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the size is the part files' lengths; pre/post row counts come from
+    // their footers (same placement rule as [[verify]]), not count() jobs
+    val files = OrcFooters.partFileLengths(spark, dir)
+    val bytes = files.map(_._2).sum
+    val expected = OrcFooters.entries(spark, dir, files.map(_._1)).map(_.rows).sum
     val parts = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
     // partitioned layouts (<col>=<val>/ nesting) are re-applied on the
     // rewrite so compaction preserves partition pruning
     val partitionCols = detectPartitionCols(fs, p)
     val before = read(spark, dir)
-    // r19 (guide §6): pre/post row counts come from ORC footer sums under
-    // the same dial as [[verify]] — two full count() jobs replaced by
-    // metadata reads for protocol-sized tables; identical values (footers
-    // are authoritative)
-    val driverMax = spark.conf.getOption("spark.graft.orc.verify.driverMaxFiles")
-      .map(_.toInt).getOrElse(256)
-    val expected =
-      if (beforePaths.size <= driverMax) footerRowSum(hconf, beforePaths.toSeq)
-      else before.count()
     val tmp = new Path(p.getParent, p.getName + ".compact-tmp")
     if (fs.exists(tmp)) fs.delete(tmp, true)
     var w = before.coalesce(parts).write.mode("overwrite")
@@ -231,15 +183,7 @@ object OrcSink {
     if (partitionCols.nonEmpty) w = w.partitionBy(partitionCols: _*)
     w.orc(tmp.toString)
     val back = spark.read.orc(tmp.toString)
-    val tmpIt = fs.listFiles(tmp, true)
-    val tmpPaths = scala.collection.mutable.ArrayBuffer.empty[Path]
-    while (tmpIt.hasNext) {
-      val f = tmpIt.next()
-      if (f.getPath.getName.endsWith(".orc")) tmpPaths += f.getPath
-    }
-    val backRows =
-      if (tmpPaths.size <= driverMax) footerRowSum(hconf, tmpPaths.toSeq)
-      else back.count()
+    val backRows = OrcFooters.dirEntries(spark, tmp.toString).map(_.rows).sum
     require(backRows == expected, s"compaction row mismatch vs $expected")
     require(back.schema.fields.map(f => (f.name, f.dataType)).toSet ==
       before.schema.fields.map(f => (f.name, f.dataType)).toSet,

@@ -9,10 +9,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.hive.ql.exec.vector.{BytesColumnVector,
   LongColumnVector}
-import org.apache.orc.{ColumnStatistics, CompressionKind,
-  DateColumnStatistics, DecimalColumnStatistics, DoubleColumnStatistics,
-  IntegerColumnStatistics, OrcFile, StringColumnStatistics,
-  TimestampColumnStatistics, TypeDescription}
+import org.apache.orc.{CompressionKind, OrcFile, TypeDescription}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
@@ -227,87 +224,6 @@ object SnapshotTable {
       extraProps = props)
     publish(spark, dir, mode, entries, maxRetries, txn,
       Some(df.schema.json), expectedVersion, props = props)
-  }
-
-  /** Distributed footer harvest: one task per bounded bundle of files,
-    * each reading ONLY the ORC footer. The Hadoop conf travels as a
-    * string map (SerializableConfiguration is spark-private). */
-  private[graft] def harvest(spark: SparkSession, files: Seq[String],
-                             statsCols: Seq[String]): Seq[FileEntry] = {
-    if (files.isEmpty) return Seq.empty
-    // r19 (guide §1.2 — fixed per-commit costs): protocol-sized commits
-    // land a handful of files; reading their footers is METADATA work of
-    // the same class as the log I/O the driver already does (the Delta
-    // commit path reads footers driver-side too), and a Spark job's
-    // launch/schedule round-trip dwarfs it. Below the dial the harvest
-    // runs on the driver; production-scale batches stay distributed.
-    val driverMax = spark.conf
-      .getOption("spark.graft.table.harvest.driverMaxFiles")
-      .map(_.toInt).getOrElse(16)
-    if (files.size <= driverMax) {
-      val conf = spark.sparkContext.hadoopConfiguration
-      // footer reads are independent; overlap the I/O (common pool) so a
-      // multi-file commit costs ~one footer latency, not their sum
-      return files.asJava.parallelStream()
-        .map[FileEntry](p => readFooter(p, statsCols, conf))
-        .collect(java.util.stream.Collectors.toList[FileEntry])
-        .asScala.toSeq.sortBy(_.path)
-    }
-    val confMap = spark.sparkContext.hadoopConfiguration.asScala
-      .map(e => (e.getKey, e.getValue)).toMap
-    val cols = statsCols
-    val slices = math.max(1, math.min(files.size, 64))
-    spark.sparkContext.parallelize(files, slices).map { p =>
-      val conf = new Configuration(false)
-      confMap.foreach { case (k, v) => conf.set(k, v) }
-      readFooter(p, cols, conf)
-    }.collect().toSeq.sortBy(_.path)
-  }
-
-  private def readFooter(path: String, statsCols: Seq[String],
-                         conf: Configuration): FileEntry = {
-    val reader = OrcFile.createReader(new Path(path),
-      OrcFile.readerOptions(conf))
-    try {
-      val schema = reader.getSchema
-      val all = reader.getStatistics
-      val names = schema.getFieldNames.asScala
-      val stats = statsCols.flatMap { c =>
-        val i = names.indexOf(c)
-        if (i < 0) None
-        else {
-          // stats are indexed by TypeDescription id (root = 0)
-          val id = schema.getChildren.get(i).getId
-          Some(c -> toColStats(all(id), reader.getNumberOfRows))
-        }
-      }.toMap
-      FileEntry(path, reader.getNumberOfRows, reader.getContentLength, stats)
-    } finally reader.close()
-  }
-
-  private def toColStats(s: ColumnStatistics, fileRows: Long): ColStats = {
-    val nulls = math.max(0L, fileRows - s.getNumberOfValues)
-    if (s.getNumberOfValues == 0) return ColStats(None, None, None, None, nulls)
-    s match {
-      case i: IntegerColumnStatistics =>
-        ColStats(Some(i.getMinimum.toDouble), Some(i.getMaximum.toDouble),
-          None, None, nulls)
-      case d: DoubleColumnStatistics =>
-        ColStats(Some(d.getMinimum), Some(d.getMaximum), None, None, nulls)
-      case d: DecimalColumnStatistics =>
-        ColStats(Some(d.getMinimum.doubleValue()),
-          Some(d.getMaximum.doubleValue()), None, None, nulls)
-      case t: TimestampColumnStatistics =>
-        ColStats(Some(t.getMinimum.getTime.toDouble),
-          Some(t.getMaximum.getTime.toDouble), None, None, nulls)
-      case d: DateColumnStatistics =>
-        ColStats(Some(d.getMinimumDayOfEpoch.toDouble),
-          Some(d.getMaximumDayOfEpoch.toDouble), None, None, nulls)
-      case st: StringColumnStatistics =>
-        ColStats(None, None, Option(st.getMinimum), Option(st.getMaximum),
-          nulls)
-      case _ => ColStats(None, None, None, None, nulls)
-    }
   }
 
   // ---- log checkpoints ---------------------------------------------------
@@ -1078,7 +994,6 @@ object SnapshotTable {
                          statsCols: Seq[String],
                          extraProps: Map[String, String] = Map.empty)
       : Seq[FileEntry] = {
-    val f = fs(spark, dir)
     val batch = f"batch-${java.util.UUID.randomUUID().toString.take(12)}"
     val batchDir = new Path(new Path(dir, "data"), batch)
     val props = tablePropertiesCached(spark, dir) ++ extraProps
@@ -1128,11 +1043,9 @@ object SnapshotTable {
           .partitionBy(ts.zipWithIndex.map { case (t, i) =>
             t.writeCol(i) }: _*)
           .orc(batchDir.toString)
-        val parts = listPartFiles(f, batchDir)
-        harvest(spark, parts.map(_.toString), all).map { e =>
-          val rel = relativize(batchDir, new Path(e.path))
+        OrcFooters.dirEntries(spark, batchDir.toString, all).map { e =>
           // parse the tuple from the partition-dir components
-          val comps = rel.split('/').dropRight(1)
+          val comps = e.path.split('/').dropRight(1)
           val tuple = ts.zipWithIndex.flatMap { case (t, i) =>
             val prefix = s"${t.writeCol(i)}="
             val raw = comps.find(_.startsWith(prefix)).map(c =>
@@ -1156,15 +1069,12 @@ object SnapshotTable {
                   Some(v), 0))
             }
           }.toMap
-          e.copy(path = s"data/$batch/$rel", stats = e.stats ++ tuple)
+          e.copy(path = s"data/$batch/${e.path}", stats = e.stats ++ tuple)
         }
       case None =>
         df.write.mode("overwrite").orc(batchDir.toString)
-        val parts = f.listStatus(batchDir).toSeq
-          .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-          .map(_.getPath.toString)
-        harvest(spark, parts, all).map(e =>
-          e.copy(path = s"data/$batch/${new Path(e.path).getName}"))
+        OrcFooters.dirEntries(spark, batchDir.toString, all).map(e =>
+          e.copy(path = s"data/$batch/${e.path}"))
     }
     withNdvSketches(spark, batchDir, df, props, staged)
   }
@@ -1210,26 +1120,6 @@ object SnapshotTable {
         case _ => e
       }
     }
-  }
-
-  /** All part-*.orc files under `root`, any depth (partitionBy nests
-    * one directory level per transform). */
-  private def listPartFiles(f: org.apache.hadoop.fs.FileSystem,
-                            root: Path): Seq[Path] = {
-    val out = Seq.newBuilder[Path]
-    def walk(p: Path): Unit = f.listStatus(p).foreach { s =>
-      if (s.isDirectory) walk(s.getPath)
-      else if (s.getPath.getName.startsWith("part-")) out += s.getPath
-    }
-    walk(root)
-    out.result()
-  }
-
-  private def relativize(root: Path, p: Path): String = {
-    val r = root.toUri.getPath
-    val full = p.toUri.getPath
-    require(full.startsWith(r), s"$p not under $root")
-    full.stripPrefix(r).stripPrefix("/")
   }
 
   private def commitJson(v: Long, mode: String, entries: Seq[FileEntry],
@@ -2248,7 +2138,6 @@ object SnapshotTable {
     * part count is invisible to them. */
   private def writeKeySidecar(spark: SparkSession, dir: String,
       batch: String, keyFrame: DataFrame): Seq[FileEntry] = {
-    val f = fs(spark, dir)
     val batchDir = new Path(new Path(dir, "data"), batch)
     val targetBytes = spark.conf
       .getOption("spark.graft.table.sidecarTargetBytes")
@@ -2263,11 +2152,8 @@ object SnapshotTable {
         (n + keysPerPart - 1) / keysPerPart)).toInt
       staged.coalesce(parts).write.mode("overwrite").orc(batchDir.toString)
     } finally staged.unpersist()
-    val parts = f.listStatus(batchDir).toSeq
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-      .map(_.getPath.toString)
-    harvest(spark, parts, Nil)
-      .map(e => e.copy(path = s"data/$batch/${new Path(e.path).getName}"))
+    OrcFooters.dirEntries(spark, batchDir.toString)
+      .map(e => e.copy(path = s"data/$batch/${e.path}"))
   }
 
   final case class MorUpdateReport(version: Long, keys: Long,

@@ -9,7 +9,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sinks.SnapshotTable
+import graft.sinks.{OrcFooters, SnapshotTable}
 
 /** Path-based catalog over snapshot tables — the Delta `delta.`/path/``
   * shape, registered once per session:
@@ -233,13 +233,12 @@ class SnapshotTableCatalog extends TableCatalog
         // by-name matching has no column mapping: if any LIVE data file
         // PHYSICALLY contains this name (written before a DROP COLUMN),
         // re-adding it would silently RESURRECT the dropped values into
-        // the new column. One distributed footer-only sweep (the same
+        // the new column. One footer sweep over the live files (the same
         // O(#files) cost as any commit's stats harvest, for a rare DDL)
         // guards it; compact first to physically shed the old column.
         val live = SnapshotTable.snapshotFiles(spark, dir,
           Some(readVersion))
-        val ghosts = SnapshotTable.harvest(spark,
-          live.map(e => s"$dir/${e.path}"), Seq(n))
+        val ghosts = OrcFooters.entries(spark, dir, live.map(_.path), Seq(n))
           .count(_.stats.contains(n))
         require(ghosts == 0,
           s"column '$n' still exists physically in $ghosts live data " +

@@ -21,7 +21,7 @@ import org.apache.spark.sql.sources.{And, DataSourceRegister, EqualTo, Filter, G
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sinks.{KeyRange, SnapshotTable}
+import graft.sinks.{KeyRange, OrcFooters, SnapshotTable}
 
 /** DataSource V2 provider for the snapshot table — the idiomatic Spark
   * surface over [[SnapshotTable]]'s commit log:
@@ -2000,7 +2000,7 @@ private[sources] object ExactFilterEval {
 
 /** Serializable Hadoop Configuration carrier (the standard pattern —
   * Configuration itself is not java-serializable). */
-private[sources] class SerConf(@transient var value: Configuration)
+private[graft] class SerConf(@transient var value: Configuration)
   extends Serializable {
   private def writeObject(out: java.io.ObjectOutputStream): Unit = {
     out.defaultWriteObject()
@@ -2523,12 +2523,8 @@ private[sources] class GraftStreamingWrite(
     val files = messages.collect {
       case GraftStreamMsg(fs) => fs.toSeq
     }.toSeq.flatten.filter(_.rel != null)
-    val rels = files.map(_.rel)
-    val abs = rels.map(r => s"$dir/$r")
-    val relOf = abs.zip(rels).toMap
     val entries = StreamTupleStamp.stamp(
-      SnapshotTable.harvest(spark, abs, statsCols)
-        .map(e => e.copy(path = relOf(e.path))),
+      OrcFooters.entries(spark, dir, files.map(_.rel), statsCols),
       files.map(f => f.rel -> f.tuple).toMap, specRender)
     // empty epochs still commit (zero entries): the txn high-water must
     // advance or a recovery replay could double-apply a later epoch
@@ -3000,11 +2996,8 @@ private[sources] class GraftReplaceDataWrite(
     val snapshot = SnapshotTable.snapshotFiles(spark, dir,
       Some(readVersion))
     val statsCols = snapshot.flatMap(_.stats.keys).distinct
-    val abs = rels.map(r => s"$dir/$r")
-    val relOf = abs.zip(rels).toMap
     val fresh = StreamTupleStamp.stamp(
-      SnapshotTable.harvest(spark, abs, statsCols)
-        .map(e => e.copy(path = relOf(e.path))),
+      OrcFooters.entries(spark, dir, rels, statsCols),
       msgFiles.map(f => f.rel -> f.tuple).toMap, specRender)
     val replacedPaths = replaced.map(_.path).toSet
     val carried = snapshot.filterNot(e => replacedPaths.contains(e.path))
@@ -3130,16 +3123,10 @@ private[sources] class GraftDeltaBatchWrite(
     val schema = SnapshotTable.snapshotSchema(spark, dir, None)
     val statsCols = SnapshotTable.snapshotFiles(spark, dir, None)
       .flatMap(_.stats.keys).distinct
-    def entriesOf(rels: Seq[String], cols: Seq[String]) = {
-      val abs = rels.map(r => s"$dir/$r")
-      val relOf = abs.zip(rels).toMap
-      SnapshotTable.harvest(spark, abs, cols)
-        .map(e => e.copy(path = relOf(e.path)))
-    }
     val rowEntries = StreamTupleStamp.stamp(
-      entriesOf(rowRels, statsCols),
+      OrcFooters.entries(spark, dir, rowRels, statsCols),
       rowFiles.map(f => f.rel -> f.tuple).toMap, specRender)
-    val keyEntries = entriesOf(keyRels, Nil).map(e =>
+    val keyEntries = OrcFooters.entries(spark, dir, keyRels.toSeq).map(e =>
       SnapshotTable.DeleteEntry(e.path, e.rows, e.bytes, keyCol))
     // Duplicated-key hazard detection (ADVICE r15): the equality delete
     // removes ALL table rows sharing a matched key, but the command only

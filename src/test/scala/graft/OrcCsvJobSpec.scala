@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.sinks.OrcSink
+import graft.sinks.{OrcFooters, OrcSink}
 import graft.sources.CsvSource
 import graft.ConversionJob.JobConfig
 
@@ -325,7 +325,7 @@ class OrcCsvJobSpec extends AnyFunSuite with SparkSessionTestWrapper {
   test("verify row count: footer sum equals the distributed count, flat and partitioned") {
     val df = Tables.t(spark, sf, "lineitem")
     val expected = df.count()
-    // flat multi-file layout (footer path: files <= dial)
+    // flat multi-file layout
     val flat = Files.createTempDirectory("orc_vfy_flat").toString
     val repFlat = OrcSink.write(df, flat, "lineitem", maxRecordsPerFile = 700)
     assert(repFlat.files >= 2)
@@ -335,11 +335,10 @@ class OrcCsvJobSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val repPart = OrcSink.write(df.withColumn("rf", col("l_returnflag")),
       part, "lineitem", partitionBy = Seq("rf"))
     assert(repPart.rows == expected)
-    // distributed fallback (dial forced to 0) returns the same number
-    spark.conf.set("spark.graft.orc.verify.driverMaxFiles", "0")
-    try {
-      assert(OrcSink.verify(spark, s"$flat/lineitem", "lineitem").rows == expected)
-      assert(OrcSink.verify(spark, s"$part/lineitem", "lineitem").rows == expected)
-    } finally spark.conf.unset("spark.graft.orc.verify.driverMaxFiles")
+    // both footer placements (driver pool, footer-only job) return the
+    // same number whatever the file count
+    for (onDriver <- Seq(true, false); dir <- Seq(s"$flat/lineitem", s"$part/lineitem"))
+      assert(OrcFooters.entriesAt(spark, dir, OrcFooters.partFiles(spark, dir),
+        Nil, onDriver).map(_.rows).sum == expected, s"onDriver=$onDriver $dir")
   }
 }
