@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Staging
 import graft.Tables._
 import graft.operators.{CountMin, Dedup, GlobalIds, NgramLm, Profile, Retrieval, Similarity, TextAnalysis, UrlCuration}
 
@@ -91,47 +92,39 @@ object LlmQueries {
       graft.operators.Retrieval.PinnedQueries, k)
   }
 
-  /** Frozen IVF centroids for the hybrid-serve gate: trained once per
-    * sf dir (deterministic Lloyd, same dials as the ann serve rows) and
-    * JVM-memoized — index build happens at staging time, never inside a
-    * served query. */
-  /** Per-sf-dir staged near-dup signature index (JVM-memoized catalog
-    * table — writeBucketed drops and recreates, so a fresh JVM rebuilds
-    * cleanly over a stale warehouse dir). Corpus side = doc_id % 10 != 0,
+  /** Per-sf-dir staged near-dup signature index (catalog table —
+    * writeBucketed drops and recreates, so a fresh JVM rebuilds cleanly
+    * over a stale warehouse dir). Corpus side = doc_id % 10 != 0,
     * matching the incremental screening gates. */
-  private val nearDupIdx =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def nearDupIndexFor(s: SparkSession, d: String): String =
-    nearDupIdx.computeIfAbsent(d, _ => {
+    Staging.once(s"neardup_idx|$d") {
       val tbl = s"graft_neardup_idx_${d.replaceAll("[^A-Za-z0-9]", "_")}"
       Dedup.buildNearDupIndex(
         t(s, d, "documents").filter(col("doc_id") % 10 =!= 0),
         "doc_id", "text", tbl, k = 32, shingleSize = 5, bands = 8)
       tbl
-    })
+    }
 
-  private val editIdx =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def editIndexFor(s: SparkSession, d: String): String =
-    editIdx.computeIfAbsent(d, _ => {
+    Staging.once(s"edit_idx|$d") {
       val tbl = s"graft_edit_idx_${d.replaceAll("[^A-Za-z0-9]", "_")}"
       Dedup.buildEditIndex(
         t(s, d, "customer").filter(col("c_custkey") < 300)
           .select(col("c_custkey").as("id"), col("c_name")),
         "id", "c_name", tbl, q = 2, maxDistBound = 2)
       tbl
-    })
+    }
 
   /** Per-sf-dir staged PERSISTENT IVF index (bucketed catalog table on
-    * the cell key; built once from the frozen hybrid centroids). */
-  private val ivfIdx = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * the cell key; built once from the frozen hybrid centroids, which it
+    * stages first). */
   private def ivfIndexFor(s: SparkSession, d: String): String =
-    ivfIdx.computeIfAbsent(d, _ => {
+    Staging.once(s"ivf_idx|$d") {
       val tbl = s"graft_ivf_idx_${d.replaceAll("[^A-Za-z0-9]", "_")}"
       Similarity.buildIvfIndex(t(s, d, "embeddings"), "vec_id", "embedding",
         tbl, hybridCentroidsFor(s, d))
       tbl
-    })
+    }
 
   /** Planted-drift fixture for the recluster gate. PRE-drift corpus:
     * 16 tight clusters in dims 0..31 (1.0 at dims {2a, 2a+1},
@@ -195,11 +188,9 @@ object LlmQueries {
     * sample, catalog re-routed in one shuffle by
     * [[Similarity.reclusterIvfIndex]]). Returns (staleTable,
     * servingTable, staleCents, servingCents, fired). */
-  private val ivfDrift = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, String, Seq[Seq[Double]], Seq[Seq[Double]], Boolean)]()
   private def ivfDriftFor(s: SparkSession, d: String)
       : (String, String, Seq[Seq[Double]], Seq[Seq[Double]], Boolean) =
-    ivfDrift.computeIfAbsent(d, _ => {
+    Staging.once(s"ivf_drift|$d") {
       val key = d.replaceAll("[^A-Za-z0-9]", "_")
       val (pre, post) = driftFrames(s, d)
       val staleCents = Similarity.trainIvfCentroids(pre, "vec_id",
@@ -219,104 +210,73 @@ object LlmQueries {
         Similarity.reclusterIvfIndex(s, staleTbl, freshTbl, freshCents)
         (staleTbl, freshTbl, staleCents, freshCents, true)
       } else (staleTbl, staleTbl, staleCents, staleCents, false)
-    })
+    }
+
+  /** Drops catalog table `tbl` and its warehouse dir, so a streamed
+    * index rebuilds cleanly over state a killed process left behind. */
+  private def dropStreamedIndex(s: SparkSession, tbl: String): Unit = {
+    s.sql(s"DROP TABLE IF EXISTS `$tbl`")
+    val loc = new org.apache.hadoop.fs.Path(
+      s.conf.get("spark.sql.warehouse.dir") + s"/$tbl")
+    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (fs.exists(loc)) fs.delete(loc, true)
+  }
 
   /** Per-sf-dir STREAMED IVF index: three embedding batch files staged
     * into a landing dir, each appended to the standing index by the
     * foreachBatch ingest loop under the frozen centroids. Rebuilt
     * cleanly once per JVM (drop table + fresh checkpoint), so stale
     * warehouse/checkpoint state from a killed process self-heals. */
-  private val ivfStreamIdx = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def ivfStreamIndexFor(s: SparkSession, d: String): String =
-    ivfStreamIdx.computeIfAbsent(d, _ => {
-      val key = d.replaceAll("[^A-Za-z0-9.]", "_")
-      val tbl = s"graft_ivf_stream_${key.replace(".", "_")}"
-      s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir") + s"/$tbl")
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-      val base = java.nio.file.Paths.get(s"/tmp/graft_stream/$key/ivf_ingest")
-      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
-      val landing = base.resolve("landing")
-      java.nio.file.Files.createDirectories(landing)
-      val emb = t(s, d, "embeddings")
-      for (i <- 0 until 3) {
-        val stage = base.resolve(s".stage-$i")
-        emb.filter(col("vec_id") % 3 === i)
-          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = stage.toFile.listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        java.nio.file.Files.move(part.toPath,
-          landing.resolve(s"batch-$i.parquet"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
-      }
-      graft.streaming.EventStream.ivfIngestApply(s, landing.toString, tbl,
-        hybridCentroidsFor(s, d), base.resolve("ckpt").toString)
+    Staging.once(s"ivf_stream|$d") {
+      val tbl = s"graft_ivf_stream_${d.replaceAll("[^A-Za-z0-9]", "_")}"
+      dropStreamedIndex(s, tbl)
+      val (landing, ckpt) = docBatchLandingFor(s, d, "ivf_ingest", lit(true),
+        table = "embeddings", idCol = "vec_id")
+      graft.streaming.EventStream.ivfIngestApply(s, landing, tbl,
+        hybridCentroidsFor(s, d), ckpt)
       tbl
-    })
+    }
 
   /** Per-sf-dir STREAMED near-dup signature index: three corpus doc
     * batches staged into a landing dir, each signatured and appended to
     * the standing band-bucketed index by the foreachBatch ingest loop —
     * the MinHash member of the streamed-index trio (BM25 / IVF /
     * near-dup). Same clean-slate discipline as [[ivfStreamIndexFor]]. */
-  private val minhashStreamIdx =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def minhashStreamIndexFor(s: SparkSession, d: String): String =
-    minhashStreamIdx.computeIfAbsent(d, _ => {
-      val key = d.replaceAll("[^A-Za-z0-9.]", "_")
-      val tbl = s"graft_minhash_stream_${key.replace(".", "_")}"
-      s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir") + s"/$tbl")
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-      val base = java.nio.file.Paths.get(s"/tmp/graft_stream/$key/minhash_ingest")
-      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
-      val landing = base.resolve("landing")
-      java.nio.file.Files.createDirectories(landing)
-      val corpus = t(s, d, "documents").filter(col("doc_id") % 10 =!= 0)
-      for (i <- 0 until 3) {
-        val stage = base.resolve(s".stage-$i")
-        corpus.filter(col("doc_id") % 3 === i)
-          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = stage.toFile.listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        java.nio.file.Files.move(part.toPath,
-          landing.resolve(s"batch-$i.parquet"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
-      }
-      graft.streaming.EventStream.minhashIngestApply(s, landing.toString,
-        tbl, base.resolve("ckpt").toString, k = 32, shingleSize = 5,
-        bands = 8)
+    Staging.once(s"minhash_stream|$d") {
+      val tbl = s"graft_minhash_stream_${d.replaceAll("[^A-Za-z0-9]", "_")}"
+      dropStreamedIndex(s, tbl)
+      val (landing, ckpt) = docBatchLandingFor(s, d, "minhash_ingest",
+        col("doc_id") % 10 =!= 0)
+      graft.streaming.EventStream.minhashIngestApply(s, landing, tbl, ckpt,
+        k = 32, shingleSize = 5, bands = 8)
       tbl
-    })
+    }
 
-  /** Stage three doc-batch files (split by doc_id mod 3, optionally
-    * filtered) into a per-sf landing dir for the monitor-style streaming
-    * gates; memoized per (d, subdir). The CHECKPOINT path is wiped on
-    * every call so each run re-processes the same three micro-batches
-    * deterministically. Returns (landingDir, checkpointDir). */
-  private val stagedLandings =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Stage `nBatches` batch files of `table` (split by `batchOf(idCol)`,
+    * filtered by `rowFilter`) into a per-sf landing dir for the
+    * streaming gates; staged once per (d, subdir). The CHECKPOINT path
+    * is wiped on every call so each run re-processes the same
+    * micro-batches deterministically. Returns (landingDir,
+    * checkpointDir). */
   private def docBatchLandingFor(s: SparkSession, d: String, subdir: String,
-                                 docFilter: Column,
+                                 rowFilter: Column,
                                  batchOf: Column => Column =
                                    c => pmod(c, lit(3)),
-                                 nBatches: Int = 3): (String, String) = {
+                                 nBatches: Int = 3,
+                                 table: String = "documents",
+                                 idCol: String = "doc_id"): (String, String) = {
     val key = d.replaceAll("[^A-Za-z0-9.]", "_")
     val base = java.nio.file.Paths.get(s"/tmp/graft_stream/$key/$subdir")
-    val landing = stagedLandings.computeIfAbsent(s"$d/$subdir", _ => {
+    val landing = Staging.once(s"landing|$d/$subdir") {
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
       val l = base.resolve("landing")
       java.nio.file.Files.createDirectories(l)
-      val docs = t(s, d, "documents").filter(docFilter)
+      val rows = t(s, d, table).filter(rowFilter)
       for (i <- 0 until nBatches) {
         val stage = base.resolve(s".stage-$i")
-        docs.filter(batchOf(col("doc_id")) === i)
+        rows.filter(batchOf(col(idCol)) === i)
           .coalesce(1).write.mode("overwrite").parquet(stage.toString)
         val part = stage.toFile.listFiles()
           .find(_.getName.endsWith(".parquet")).get
@@ -326,7 +286,7 @@ object LlmQueries {
         org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
       }
       l.toString
-    })
+    }
     val ckpt = base.resolve("ckpt")
     org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
     (landing, ckpt.toString)
@@ -334,40 +294,14 @@ object LlmQueries {
   private def driftLandingFor(s: SparkSession, d: String): (String, String) =
     docBatchLandingFor(s, d, "ks_drift", lit(true))
 
-  /** Embedding twin of [[docBatchLandingFor]]: three vec_id-mod-3
-    * embedding batches, fresh checkpoint per call. */
-  private def embBatchLandingFor(s: SparkSession, d: String): (String, String) = {
-    val key = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = java.nio.file.Paths.get(s"/tmp/graft_stream/$key/cluster_route")
-    val landing = stagedLandings.computeIfAbsent(s"$d/cluster_route", _ => {
-      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
-      val l = base.resolve("landing")
-      java.nio.file.Files.createDirectories(l)
-      val emb = t(s, d, "embeddings")
-      for (i <- 0 until 3) {
-        val stage = base.resolve(s".stage-$i")
-        emb.filter(col("vec_id") % 3 === i)
-          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = stage.toFile.listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        java.nio.file.Files.move(part.toPath,
-          l.resolve(s"batch-$i.parquet"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
-      }
-      l.toString
-    })
-    val ckpt = base.resolve("ckpt")
-    org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
-    (landing, ckpt.toString)
-  }
-
-  private val hybridCentroids =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Seq[Double]]]()
+  /** Frozen IVF centroids for the hybrid-serve gate: trained once per
+    * sf dir (deterministic Lloyd, same dials as the ann serve rows) —
+    * index build happens at staging time, never inside a served query. */
   private def hybridCentroidsFor(s: SparkSession, d: String): Seq[Seq[Double]] =
-    hybridCentroids.computeIfAbsent(d, _ =>
+    Staging.once(s"hybrid_centroids|$d") {
       Similarity.trainIvfCentroids(t(s, d, "embeddings"), "vec_id",
-        "embedding", nCentroids = 16, lloydIters = 2))
+        "embedding", nCentroids = 16, lloydIters = 2)
+    }
 
   /** DuckDB recomputation of the BPE merge cascade. Encoding: every
     * symbol is wrapped `§sym§` (each token carries its OWN delimiters, so
@@ -3040,7 +2974,8 @@ object LlmQueries {
     // driver map. The oracle replays the assignment AND the cumulative
     // admission arithmetic per (batch, cluster).
     "stream_cluster_route" -> { (s, d) =>
-      val (landing, ckpt) = embBatchLandingFor(s, d)
+      val (landing, ckpt) = docBatchLandingFor(s, d, "cluster_route", lit(true),
+        table = "embeddings", idCol = "vec_id")
       val emb = t(s, d, "embeddings")
       graft.streaming.EventStream.clusterRouteApply(s, landing,
           clusterSeeds(emb), cap = 25, ckpt)
@@ -3434,8 +3369,39 @@ object LlmQueries {
       |SELECT tbl, check_name, violations, violations = 0 AS passed
       |FROM raw ORDER BY tbl, check_name""".stripMargin
 
+  /** Gates whose oracle is, byte for byte, another gate's: the same
+    * answer reached by a different path. (gate, gate whose oracle it
+    * reuses). */
+  private val sharedOracles: Seq[(String, String)] = Seq(
+    // the served, incrementally updated and stream-appended BM25 indexes
+    // must each reproduce from-scratch BM25 over the whole corpus
+    "text_bm25_serve" -> "text_bm25_topk",
+    "text_bm25_incremental" -> "text_bm25_topk",
+    "stream_bm25_ingest" -> "text_bm25_topk",
+    // every ANN tier (JL/PCA/truncated shortlists, IVF, int8, PQ, the
+    // persisted and the stream-built index) pins the same deterministic
+    // recall verdict
+    "ann_rp_topk" -> "ann_lsh_topk",
+    "ann_pca_topk" -> "ann_lsh_topk",
+    "ann_truncated_topk" -> "ann_lsh_topk",
+    "ann_ivf_topk" -> "ann_lsh_topk",
+    "ann_int8_topk" -> "ann_lsh_topk",
+    "ann_ivf_index_serve" -> "ann_lsh_topk",
+    "stream_ivf_ingest" -> "ann_lsh_topk",
+    "ann_ivf_int8_topk" -> "ann_lsh_topk",
+    "ann_ivf_pq_topk" -> "ann_lsh_topk",
+    "ann_ivf_pq_refine" -> "ann_lsh_topk",
+    // candidate funnels (minhash-verified UNION exact, the full-recall
+    // minhash pairs, embedding LSH) must collapse to exactly the exact
+    // answer; the bloom prefilter + exact confirm returns exactly the
+    // exact-join contamination answer
+    "dedup_minhash_precision" -> "dedup_ngram_jaccard",
+    "dedup_minhash_pairs" -> "dedup_ngram_jaccard",
+    "dedup_embedding_lsh" -> "dedup_embedding_cosine",
+    "pipeline_bloom_decontam" -> "pipeline_contamination_ngram")
+
   def oracles: Map[String, String] =
-    baseOracles +
+    baseOracles ++ sharedOracles.map { case (g, src) => g -> baseOracles(src) } +
       ("dedup_clusters_dist" -> baseOracles("dedup_clusters")) +
       ("graph_pagerank" -> PageRankOracleSql) +
       ("profile_expectations" -> ExpectationsOracleSql) +
@@ -3480,6 +3446,70 @@ object LlmQueries {
            |JOIN (${baseOracles("text_gopher_quality")}) g USING (doc_id)
            |JOIN (${baseOracles("text_kn_bigram")}) k USING (doc_id)
            |ORDER BY a.doc_id""".stripMargin)
+
+  /** Shingle-Jaccard pairs of the first 100 docs (5-char shingles of
+    * whitespace-normalized text, Jaccard >= 0.25) and their transitive
+    * closure `reach(u, v)` by recursive CTE: the cluster replay the
+    * dedup_clusters, pipeline_leakfree_split and dedup_keep_* oracles
+    * continue from (each appends its own tail). */
+  private val ClusterClosureCtes: String =
+    """WITH RECURSIVE n AS (
+      | SELECT doc_id, regexp_replace(trim(text), '\s+', ' ', 'g') AS t
+      | FROM documents WHERE doc_id < 100),
+      |s AS (
+      | SELECT DISTINCT doc_id, substr(t, i.i, 5) AS g
+      | FROM n, generate_series(1, 600) i(i)
+      | WHERE i.i <= GREATEST(length(t) - 4, 1)),
+      |ds AS (SELECT doc_id, COUNT(*) AS nsh FROM s GROUP BY 1),
+      |ip AS (
+      | SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS inter
+      | FROM s a JOIN s b ON a.g = b.g AND a.doc_id < b.doc_id
+      | GROUP BY 1, 2),
+      |p AS (
+      | SELECT a_id, b_id FROM ip
+      | JOIN ds na ON na.doc_id = a_id
+      | JOIN ds nb ON nb.doc_id = b_id
+      | WHERE inter / (na.nsh + nb.nsh - inter) >= 0.25),
+      |und AS (SELECT a_id AS u, b_id AS v FROM p UNION SELECT b_id, a_id FROM p),
+      |reach(u, v) AS (
+      | SELECT u, v FROM und
+      | UNION
+      | SELECT r.u, e.v FROM reach r JOIN und e ON r.v = e.u WHERE e.v <> r.u)""".stripMargin
+
+  /** CTEs n and s: each document's quality score `q` (the Spark
+    * qualityScore replay), keyed by `key` — the grid the KS-drift oracles
+    * compare distributions over. */
+  private def qualityScoreCtes(key: String): String =
+    s"""WITH n AS (
+       | SELECT $key, text,
+       |  regexp_replace(trim(text), '\\s+', ' ', 'g') AS t
+       | FROM documents),
+       |s AS (
+       | SELECT $key,
+       |  CASE WHEN length(text) = 0 THEN 0.0 ELSE
+       |   ROUND(
+       |    LEAST(1.0, (CASE WHEN length(t) = 0 THEN 0
+       |                ELSE length(t) - length(translate(t, ' ', '')) + 1 END) / 50.0)
+       |    * (1.0 - (length(text) - length(translate(text, '.,;:!?', ''))) / length(text))
+       |    * (1.0 - (length(text) - length(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', ''))) / length(text)),
+       |   4) END AS q
+       | FROM n)""".stripMargin
+
+  /** The two-sample KS core of the drift oracles: `counts` selects
+    * (q, c1, c2) per grid value; both CDFs run over q and the rows rank
+    * by |F1 - F2| (ties to the lowest q), so `rn = 1` is the statistic
+    * and its argmax. */
+  private def ksRanked(counts: String): String =
+    """  ROW_NUMBER() OVER (ORDER BY abs(f1 - f2) DESC, q) AS rn
+      | FROM (
+      |  SELECT q,
+      |   SUM(c1) OVER (ORDER BY q ROWS UNBOUNDED PRECEDING)
+      |    / SUM(c1) OVER () AS f1,
+      |   SUM(c2) OVER (ORDER BY q ROWS UNBOUNDED PRECEDING)
+      |    / SUM(c2) OVER () AS f2
+      |  FROM (
+      |""".stripMargin + counts + """)))
+      |WHERE rn = 1""".stripMargin
 
   private def baseOracles: Map[String, String] = Map(
     "text_stats" ->
@@ -4422,23 +4452,6 @@ object LlmQueries {
         |WHERE doc_id % 10 <> 0 AND span IN (SELECT span FROM b)
         |ORDER BY doc_id""".stripMargin,
 
-    // Bloom prefilter + exact confirm returns exactly the exact-join
-    // answer, so the oracle is the identical contamination query.
-    "pipeline_bloom_decontam" ->
-      """WITH n AS (
-        | SELECT doc_id,
-        |  string_split(regexp_replace(trim(text), '\s+', ' ', 'g'), ' ') AS toks
-        | FROM documents),
-        |w AS (
-        | SELECT DISTINCT doc_id,
-        |  array_to_string(list_slice(toks, i.i, i.i + 7), ' ') AS span
-        | FROM n, generate_series(1, 200) i(i)
-        | WHERE i.i <= len(toks) - 7),
-        |b AS (SELECT DISTINCT span FROM w WHERE doc_id % 10 = 0)
-        |SELECT DISTINCT doc_id FROM w
-        |WHERE doc_id % 10 <> 0 AND span IN (SELECT span FROM b)
-        |ORDER BY doc_id""".stripMargin,
-
     "dedup_span_scrub" ->
       """WITH n AS (
         | SELECT doc_id, regexp_replace(trim(text), '\s+', ' ', 'g') AS t FROM documents),
@@ -4611,57 +4624,15 @@ object LlmQueries {
     // higher threshold for multi-cluster structure), then transitive
     // closure by recursive CTE; cluster label = min reachable id.
     "dedup_clusters" ->
-      """WITH RECURSIVE n AS (
-        | SELECT doc_id, regexp_replace(trim(text), '\s+', ' ', 'g') AS t
-        | FROM documents WHERE doc_id < 100),
-        |s AS (
-        | SELECT DISTINCT doc_id, substr(t, i.i, 5) AS g
-        | FROM n, generate_series(1, 600) i(i)
-        | WHERE i.i <= GREATEST(length(t) - 4, 1)),
-        |ds AS (SELECT doc_id, COUNT(*) AS nsh FROM s GROUP BY 1),
-        |ip AS (
-        | SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS inter
-        | FROM s a JOIN s b ON a.g = b.g AND a.doc_id < b.doc_id
-        | GROUP BY 1, 2),
-        |p AS (
-        | SELECT a_id, b_id FROM ip
-        | JOIN ds na ON na.doc_id = a_id
-        | JOIN ds nb ON nb.doc_id = b_id
-        | WHERE inter / (na.nsh + nb.nsh - inter) >= 0.25),
-        |und AS (SELECT a_id AS u, b_id AS v FROM p UNION SELECT b_id, a_id FROM p),
-        |reach(u, v) AS (
-        | SELECT u, v FROM und
-        | UNION
-        | SELECT r.u, e.v FROM reach r JOIN und e ON r.v = e.u WHERE e.v <> r.u)
+      (ClusterClosureCtes + """
         |SELECT CAST(u AS BIGINT) AS id, CAST(LEAST(u, MIN(v)) AS BIGINT) AS cluster_id
-        |FROM reach GROUP BY u""".stripMargin,
+        |FROM reach GROUP BY u""".stripMargin),
 
     // Clusters CTE (same as dedup_clusters) -> representative fill ->
     // md5-bucket thresholds: floor(0.8*65536) = 0xcccc,
     // floor(0.9*65536) = 0xe666 — identical to Sampling.thresholdHex.
     "pipeline_leakfree_split" ->
-      """WITH RECURSIVE n AS (
-        | SELECT doc_id, regexp_replace(trim(text), '\s+', ' ', 'g') AS t
-        | FROM documents WHERE doc_id < 100),
-        |s AS (
-        | SELECT DISTINCT doc_id, substr(t, i.i, 5) AS g
-        | FROM n, generate_series(1, 600) i(i)
-        | WHERE i.i <= GREATEST(length(t) - 4, 1)),
-        |ds AS (SELECT doc_id, COUNT(*) AS nsh FROM s GROUP BY 1),
-        |ip AS (
-        | SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS inter
-        | FROM s a JOIN s b ON a.g = b.g AND a.doc_id < b.doc_id
-        | GROUP BY 1, 2),
-        |p AS (
-        | SELECT a_id, b_id FROM ip
-        | JOIN ds na ON na.doc_id = a_id
-        | JOIN ds nb ON nb.doc_id = b_id
-        | WHERE inter / (na.nsh + nb.nsh - inter) >= 0.25),
-        |und AS (SELECT a_id AS u, b_id AS v FROM p UNION SELECT b_id, a_id FROM p),
-        |reach(u, v) AS (
-        | SELECT u, v FROM und
-        | UNION
-        | SELECT r.u, e.v FROM reach r JOIN und e ON r.v = e.u WHERE e.v <> r.u),
+      (ClusterClosureCtes + """,
         |comp AS (SELECT u AS id, LEAST(u, MIN(v)) AS cluster_id
         |         FROM reach GROUP BY u),
         |r AS (
@@ -4671,64 +4642,22 @@ object LlmQueries {
         | CASE WHEN substr(md5(CAST(rep AS VARCHAR)), 1, 4) < 'cccc' THEN 'train'
         |      WHEN substr(md5(CAST(rep AS VARCHAR)), 1, 4) < 'e666' THEN 'val'
         |      ELSE 'test' END AS split
-        |FROM r ORDER BY doc_id""".stripMargin,
+        |FROM r ORDER BY doc_id""".stripMargin),
 
     // Same recursive closure as dedup_clusters, then the actual drop:
     // non-min cluster members go, untouched docs stay.
     "dedup_keep_canonical" ->
-      """WITH RECURSIVE n AS (
-        | SELECT doc_id, regexp_replace(trim(text), '\s+', ' ', 'g') AS t
-        | FROM documents WHERE doc_id < 100),
-        |s AS (
-        | SELECT DISTINCT doc_id, substr(t, i.i, 5) AS g
-        | FROM n, generate_series(1, 600) i(i)
-        | WHERE i.i <= GREATEST(length(t) - 4, 1)),
-        |ds AS (SELECT doc_id, COUNT(*) AS nsh FROM s GROUP BY 1),
-        |ip AS (
-        | SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS inter
-        | FROM s a JOIN s b ON a.g = b.g AND a.doc_id < b.doc_id
-        | GROUP BY 1, 2),
-        |p AS (
-        | SELECT a_id, b_id FROM ip
-        | JOIN ds na ON na.doc_id = a_id
-        | JOIN ds nb ON nb.doc_id = b_id
-        | WHERE inter / (na.nsh + nb.nsh - inter) >= 0.25),
-        |und AS (SELECT a_id AS u, b_id AS v FROM p UNION SELECT b_id, a_id FROM p),
-        |reach(u, v) AS (
-        | SELECT u, v FROM und
-        | UNION
-        | SELECT r.u, e.v FROM reach r JOIN und e ON r.v = e.u WHERE e.v <> r.u),
+      (ClusterClosureCtes + """,
         |drop_ids AS (
         | SELECT u AS id FROM reach GROUP BY u HAVING LEAST(u, MIN(v)) <> u)
         |SELECT doc_id, md5(t) AS fp FROM n
         |WHERE doc_id NOT IN (SELECT id FROM drop_ids)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
 
     // Same cluster replay as dedup_keep_canonical; the survivor rule is
     // argmax(length, tie lowest id) over each component.
     "dedup_keep_best" ->
-      """WITH RECURSIVE n AS (
-        | SELECT doc_id, regexp_replace(trim(text), '\s+', ' ', 'g') AS t
-        | FROM documents WHERE doc_id < 100),
-        |s AS (
-        | SELECT DISTINCT doc_id, substr(t, i.i, 5) AS g
-        | FROM n, generate_series(1, 600) i(i)
-        | WHERE i.i <= GREATEST(length(t) - 4, 1)),
-        |ds AS (SELECT doc_id, COUNT(*) AS nsh FROM s GROUP BY 1),
-        |ip AS (
-        | SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS inter
-        | FROM s a JOIN s b ON a.g = b.g AND a.doc_id < b.doc_id
-        | GROUP BY 1, 2),
-        |p AS (
-        | SELECT a_id, b_id FROM ip
-        | JOIN ds na ON na.doc_id = a_id
-        | JOIN ds nb ON nb.doc_id = b_id
-        | WHERE inter / (na.nsh + nb.nsh - inter) >= 0.25),
-        |und AS (SELECT a_id AS u, b_id AS v FROM p UNION SELECT b_id, a_id FROM p),
-        |reach(u, v) AS (
-        | SELECT u, v FROM und
-        | UNION
-        | SELECT r.u, e.v FROM reach r JOIN und e ON r.v = e.u WHERE e.v <> r.u),
+      (ClusterClosureCtes + """,
         |comp AS (SELECT u AS id, LEAST(u, MIN(v)) AS cid FROM reach GROUP BY u),
         |m AS (SELECT c.id, c.cid, length(n.t) AS len FROM comp c JOIN n ON n.doc_id = c.id),
         |r AS (
@@ -4737,7 +4666,7 @@ object LlmQueries {
         |drop_ids AS (SELECT id FROM r WHERE rn <> 1)
         |SELECT doc_id, md5(t) AS fp FROM n
         |WHERE doc_id NOT IN (SELECT id FROM drop_ids)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
 
     // One UNION ALL branch per profiled column; min/max rendered VARCHAR
     // to match the Spark side's type-independent output schema.
@@ -4845,37 +4774,6 @@ object LlmQueries {
         |SELECT vec_id, bench_id, ROUND(cr, 4) AS cosine
         |FROM f WHERE rn = 1 ORDER BY vec_id""".stripMargin,
 
-    // identical to dedup_embedding_cosine: the union-with-exact Spark query
-    // must collapse to exactly the brute-force answer (precision check)
-    "dedup_embedding_lsh" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
-        |           FROM embeddings WHERE vec_id < 200)
-        |SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-        | ROUND(list_cosine_similarity(a.v, b.v), 4) AS cosine
-        |FROM e a, e b
-        |WHERE a.vec_id < b.vec_id AND list_cosine_similarity(a.v, b.v) >= 0.35""".stripMargin,
-
-    // identical to dedup_ngram_jaccard: minhash-verified UNION exact must
-    // collapse to exactly the exact answer (precision check)
-    "dedup_minhash_precision" ->
-      """WITH n AS (
-        | SELECT doc_id, regexp_replace(trim(text), '\s+', ' ', 'g') AS t
-        | FROM documents WHERE doc_id < 60),
-        |s AS (
-        | SELECT DISTINCT doc_id, substr(t, i.i, 5) AS g
-        | FROM n, generate_series(1, 600) i(i)
-        | WHERE i.i <= GREATEST(length(t) - 4, 1)),
-        |ds AS (SELECT doc_id, COUNT(*) AS nsh FROM s GROUP BY 1),
-        |pairs AS (
-        | SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS inter
-        | FROM s a JOIN s b ON a.g = b.g AND a.doc_id < b.doc_id
-        | GROUP BY 1, 2)
-        |SELECT a_id, b_id, ROUND(inter / (na.nsh + nb.nsh - inter), 4) AS jaccard
-        |FROM pairs
-        |JOIN ds na ON na.doc_id = a_id
-        |JOIN ds nb ON nb.doc_id = b_id
-        |WHERE inter / (na.nsh + nb.nsh - inter) >= 0.2""".stripMargin,
-
     "emb_label_centroids" ->
       """SELECT label, CAST(i.i - 1 AS BIGINT) AS dim,
         | ROUND(CAST(SUM(CAST(embedding[i.i] AS DECIMAL(18,9))) AS DOUBLE) / COUNT(*), 6) AS centroid
@@ -4901,23 +4799,6 @@ object LlmQueries {
       """SELECT vec_id AS query_id, true AS recall_ok
         |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin,
 
-    // JL-projection shortlist + exact re-rank: deterministic seeded
-    // matrix, so the verdict pins like the other ANN tiers.
-    "ann_rp_topk" ->
-      """SELECT vec_id AS query_id, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin,
-
-    // PCA shortlist + exact re-rank: deterministic (id-ordered sample,
-    // fixed-order driver accumulation, sign-normalized eigenvectors), so
-    // the verdict pins like the other ANN tiers.
-    "ann_pca_topk" ->
-      """SELECT vec_id AS query_id, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin,
-
-    "ann_truncated_topk" ->
-      """SELECT vec_id AS query_id, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin,
-
     // Full greedy-MMR trajectory replay — hard equality on every pick.
     "ann_mmr_rerank" -> s"WITH ${mmrOracleSql(5, 0.7, 20, 10)}",
 
@@ -4939,43 +4820,12 @@ object LlmQueries {
         | true AS recon_ok
         |FROM c ORDER BY vec_id""".stripMargin,
 
-    "ann_ivf_topk" ->
-      """SELECT vec_id AS query_id, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin,
-
-    "ann_int8_topk" ->
-      """SELECT vec_id AS query_id, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin,
-
-    // persisted-index serve: same verdict contract as the in-memory IVF
-    "ann_ivf_index_serve" ->
-      """SELECT vec_id AS query_id, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin,
-
     // drift-maintenance verdicts: the planted shift must trip the KS
     // monitor, the stale index must FAIL the recall floor on every
     // post-drift query, and the reclustered index must meet it
     "ann_ivf_recluster" ->
       """SELECT vec_id AS query_id, true AS drift_fired,
         | false AS stale_ok, true AS fresh_ok
-        |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin,
-
-    // streamed-ingest index: same verdict contract — the streamed index
-    // must serve with the recall the full build achieves
-    "stream_ivf_ingest" ->
-      """SELECT vec_id AS query_id, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin,
-
-    "ann_ivf_int8_topk" ->
-      """SELECT vec_id AS query_id, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin,
-
-    "ann_ivf_pq_topk" ->
-      """SELECT vec_id AS query_id, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin,
-
-    "ann_ivf_pq_refine" ->
-      """SELECT vec_id AS query_id, true AS recall_ok
         |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin,
 
     // SemDeDup soundness verdict over the WHOLE corpus (one row per
@@ -5037,12 +4887,6 @@ object LlmQueries {
         |   '\d{3}-\d{3}-\d{4}', '[PHONE]', 'g')) AS scrub_md5
         |FROM p ORDER BY doc_id""".stripMargin,
 
-    // Serve path must reproduce the full-computation ranking exactly.
-    "text_bm25_serve" ->
-      s"""WITH ${bm25Ctes(10)}
-         |SELECT query_id, doc_id, rank, score FROM lex
-         |ORDER BY query_id, rank""".stripMargin,
-
     // Hybrid fusion: the BM25 CTE chain at k=20 plus the proven
     // brute-force cosine ranking, RRF contributions rounded to 6 then
     // decimal-summed, final rank ties by doc_id.
@@ -5068,20 +4912,6 @@ object LlmQueries {
          |  ROW_NUMBER() OVER (PARTITION BY query_id
          |    ORDER BY rrf_score DESC, doc_id) AS rank, rrf_score FROM f)
          |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
-
-    // Incremental update == full rebuild: serving the updated index must
-    // reproduce from-scratch BM25 over the whole corpus exactly.
-    "text_bm25_incremental" ->
-      s"""WITH ${bm25Ctes(10)}
-         |SELECT query_id, doc_id, rank, score FROM lex
-         |ORDER BY query_id, rank""".stripMargin,
-
-    // Streaming segment appends == full rebuild: same oracle — the
-    // maintained index must serve from-scratch BM25 over the corpus.
-    "stream_bm25_ingest" ->
-      s"""WITH ${bm25Ctes(10)}
-         |SELECT query_id, doc_id, rank, score FROM lex
-         |ORDER BY query_id, rank""".stripMargin,
 
     // Hybrid SERVE: the lexical leg is replayed exactly (same doc:rank
     // string, same md5); the vector-leg recall and fusion-replay
@@ -5305,28 +5135,6 @@ object LlmQueries {
         | (ROUND(CAST(SUM(tf * logodds) AS DOUBLE) / SUM(tf), 4) + 0.0 > 0.0) AS keep
         |FROM tf JOIN w USING (term)
         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // Exact all-pairs Jaccard over the gate slice (identical formulation
-    // to dedup_ngram_jaccard): the minhash funnel's full-recall output
-    // must equal it set-for-set.
-    "dedup_minhash_pairs" ->
-      """WITH n AS (
-        | SELECT doc_id, regexp_replace(trim(text), '\s+', ' ', 'g') AS t
-        | FROM documents WHERE doc_id < 60),
-        |s AS (
-        | SELECT DISTINCT doc_id, substr(t, i.i, 5) AS g
-        | FROM n, generate_series(1, 600) i(i)
-        | WHERE i.i <= GREATEST(length(t) - 4, 1)),
-        |ds AS (SELECT doc_id, COUNT(*) AS nsh FROM s GROUP BY 1),
-        |pairs AS (
-        | SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS inter
-        | FROM s a JOIN s b ON a.g = b.g AND a.doc_id < b.doc_id
-        | GROUP BY 1, 2)
-        |SELECT a_id, b_id, ROUND(inter / (na.nsh + nb.nsh - inter), 4) AS jaccard
-        |FROM pairs
-        |JOIN ds na ON na.doc_id = a_id
-        |JOIN ds nb ON nb.doc_id = b_id
-        |WHERE inter / (na.nsh + nb.nsh - inter) >= 0.2""".stripMargin,
 
     // Exact all-pairs Jaccard over the FULL table, list-intersect
     // formulation with the sound size prefilter (j >= t implies
@@ -5769,40 +5577,17 @@ object LlmQueries {
     // per-ingest-batch KS replay: three blocks, left = the batch's
     // members, right = the whole corpus (the standing reference)
     "stream_ks_drift" -> {
-      val qualityCte =
-        """WITH n AS (
-          | SELECT doc_id, text,
-          |  regexp_replace(trim(text), '\s+', ' ', 'g') AS t
-          | FROM documents),
-          |s AS (
-          | SELECT doc_id,
-          |  CASE WHEN length(text) = 0 THEN 0.0 ELSE
-          |   ROUND(
-          |    LEAST(1.0, (CASE WHEN length(t) = 0 THEN 0
-          |                ELSE length(t) - length(translate(t, ' ', '')) + 1 END) / 50.0)
-          |    * (1.0 - (length(text) - length(translate(text, '.,;:!?', ''))) / length(text))
-          |    * (1.0 - (length(text) - length(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', ''))) / length(text)),
-          |   4) END AS q
-          | FROM n)""".stripMargin
       def block(i: Int): String =
         s"""SELECT batch_id, n_docs, ks_d, argmax_q FROM (
            | SELECT CAST($i AS BIGINT) AS batch_id,
            |  (SELECT CAST(COUNT(*) AS BIGINT) FROM s WHERE doc_id % 3 = $i)
            |   AS n_docs,
            |  ROUND(abs(f1 - f2), 6) AS ks_d, q AS argmax_q,
-           |  ROW_NUMBER() OVER (ORDER BY abs(f1 - f2) DESC, q) AS rn
-           | FROM (
-           |  SELECT q,
-           |   SUM(c1) OVER (ORDER BY q ROWS UNBOUNDED PRECEDING)
-           |    / SUM(c1) OVER () AS f1,
-           |   SUM(c2) OVER (ORDER BY q ROWS UNBOUNDED PRECEDING)
-           |    / SUM(c2) OVER () AS f2
-           |  FROM (
-           |   SELECT q, SUM(CASE WHEN doc_id % 3 = $i THEN 1 ELSE 0 END) AS c1,
-           |    COUNT(*) AS c2
-           |   FROM s GROUP BY q)))
-           |WHERE rn = 1""".stripMargin
-      qualityCte + "\n" + (0 until 3).map(block).mkString("\nUNION ALL\n") +
+           |""".stripMargin + ksRanked(
+          s"""   SELECT q, SUM(CASE WHEN doc_id % 3 = $i THEN 1 ELSE 0 END) AS c1,
+             |    COUNT(*) AS c2
+             |   FROM s GROUP BY q""".stripMargin)
+      qualityScoreCtes("doc_id") + "\n" + (0 until 3).map(block).mkString("\nUNION ALL\n") +
         "\nORDER BY batch_id"
     },
 
@@ -5817,20 +5602,12 @@ object LlmQueries {
         s"""SELECT batch_id, ks_d FROM (
            | SELECT CAST($i AS BIGINT) AS batch_id,
            |  ROUND(abs(f1 - f2), 6) AS ks_d,
-           |  ROW_NUMBER() OVER (ORDER BY abs(f1 - f2) DESC, q) AS rn
-           | FROM (
-           |  SELECT q,
-           |   SUM(c1) OVER (ORDER BY q ROWS UNBOUNDED PRECEDING)
-           |    / SUM(c1) OVER () AS f1,
-           |   SUM(c2) OVER (ORDER BY q ROWS UNBOUNDED PRECEDING)
-           |    / SUM(c2) OVER () AS f2
-           |  FROM (
-           |   SELECT s.q,
-           |    SUM(CASE WHEN sv.bid = $i THEN 1 ELSE 0 END) AS c1,
-           |    COUNT(*) AS c2
-           |   FROM s LEFT JOIN surv sv ON sv.doc_id = s.doc_id
-           |   GROUP BY s.q)))
-           |WHERE rn = 1""".stripMargin
+           |""".stripMargin + ksRanked(
+          s"""   SELECT s.q,
+             |    SUM(CASE WHEN sv.bid = $i THEN 1 ELSE 0 END) AS c1,
+             |    COUNT(*) AS c2
+             |   FROM s LEFT JOIN surv sv ON sv.doc_id = s.doc_id
+             |   GROUP BY s.q""".stripMargin)
       s"""WITH n AS (
          | SELECT doc_id, source, text,
          |  regexp_replace(trim(text), '\\s+', ' ', 'g') AS t
@@ -6020,38 +5797,15 @@ object LlmQueries {
     // three two-sample KS blocks over the shared quality replica; exact
     // integer-count ECDF fractions, smallest-argmax witness
     "profile_ks_drift" -> {
-      val qualityCte =
-        """WITH n AS (
-          | SELECT source, text,
-          |  regexp_replace(trim(text), '\s+', ' ', 'g') AS t
-          | FROM documents),
-          |s AS (
-          | SELECT source,
-          |  CASE WHEN length(text) = 0 THEN 0.0 ELSE
-          |   ROUND(
-          |    LEAST(1.0, (CASE WHEN length(t) = 0 THEN 0
-          |                ELSE length(t) - length(translate(t, ' ', '')) + 1 END) / 50.0)
-          |    * (1.0 - (length(text) - length(translate(text, '.,;:!?', ''))) / length(text))
-          |    * (1.0 - (length(text) - length(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', ''))) / length(text)),
-          |   4) END AS q
-          | FROM n)""".stripMargin
       def block(label: String, left: String, right: String): String =
         s"""SELECT pair, ks_d, argmax_q FROM (
            | SELECT '$label' AS pair, ROUND(abs(f1 - f2), 6) AS ks_d,
            |  q AS argmax_q,
-           |  ROW_NUMBER() OVER (ORDER BY abs(f1 - f2) DESC, q) AS rn
-           | FROM (
-           |  SELECT q,
-           |   SUM(c1) OVER (ORDER BY q ROWS UNBOUNDED PRECEDING)
-           |    / SUM(c1) OVER () AS f1,
-           |   SUM(c2) OVER (ORDER BY q ROWS UNBOUNDED PRECEDING)
-           |    / SUM(c2) OVER () AS f2
-           |  FROM (
-           |   SELECT q, SUM(CASE WHEN $left THEN 1 ELSE 0 END) AS c1,
-           |    SUM(CASE WHEN $right THEN 1 ELSE 0 END) AS c2
-           |   FROM s WHERE ($left) OR ($right) GROUP BY q)))
-           |WHERE rn = 1""".stripMargin
-      qualityCte + "\n" +
+           |""".stripMargin + ksRanked(
+          s"""   SELECT q, SUM(CASE WHEN $left THEN 1 ELSE 0 END) AS c1,
+             |    SUM(CASE WHEN $right THEN 1 ELSE 0 END) AS c2
+             |   FROM s WHERE ($left) OR ($right) GROUP BY q""".stripMargin)
+      qualityScoreCtes("source") + "\n" +
         Seq(
           block("src0|src1", "source = 'src0'", "source = 'src1'"),
           block("src0|src19", "source = 'src0'", "source = 'src19'"),

@@ -16,6 +16,54 @@ import graft.streaming.EventStream
   */
 object PipelineQueries {
 
+  /** Probe triplets of the perceptual pair gates: per doc id < 100 the
+    * original (id), its retouched or re-encoded twin (id + 1000) and a
+    * different-frequency foil (id + 2000), rendered by
+    * `payload(id, w, h, variant)` (variant 0, 1, 2) at a per-id size.
+    * Returns (ids, (doc_id, payload)). */
+  private def probeTriplets(s: SparkSession, d: String)(
+      payload: (Long, Int, Int, Int) => Array[Byte]): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
+    val ids = t(s, d, "documents").filter(col("doc_id") < 100).select(col("doc_id"))
+    val schema = StructType(Seq(
+      StructField("doc_id", LongType, nullable = false),
+      StructField("payload", BinaryType, nullable = false)))
+    (ids, s.createDataFrame(ids.rdd.flatMap { r =>
+      val id = r.getLong(0)
+      val (w, h) = (18 + (id % 7).toInt, 16 + (id % 5).toInt)
+      (0 until 3).map(v => Row(id + 1000L * v, payload(id, w, h, v)))
+    }, schema))
+  }
+
+  /** Pixel `i` of frame `f` of a probe: the original's formula (with
+    * every 29th pixel lifted by 8 when `retouch`), or the foil's
+    * different frequency. */
+  private def probePixel(id: Long, foil: Boolean, f: Int, retouch: Boolean)(
+      i: Int): Int =
+    if (foil) ((i * (101 + id % 17) + id * 53 + f * 29) % 256).toInt
+    else ((i * (37 + id % 13) + id * 31 + f * 29 +
+      (if (retouch && i % 29 == 0) 8 else 0)) % 256).toInt
+
+  /** One verdict row per base doc of a triplet pair set: whether the
+    * twin paired with its original, and whether the foil paired with
+    * the original or the twin. */
+  private def twinFoilVerdicts(ids: DataFrame, pairs: DataFrame): DataFrame = {
+    val twin = pairs
+      .filter(col("a_id") < 1000L && col("b_id") === col("a_id") + 1000L)
+      .select(col("a_id").as("doc_id"), lit(true).as("tp")).distinct()
+    val foil = pairs
+      .filter((col("a_id") < 1000L && col("b_id") === col("a_id") + 2000L) ||
+        (col("a_id") >= 1000L && col("a_id") < 2000L &&
+          col("b_id") === col("a_id") + 1000L))
+      .select((col("b_id") - 2000L).as("doc_id"), lit(true).as("fp")).distinct()
+    ids.join(twin, Seq("doc_id"), "left").join(foil, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("tp"), lit(false)).as("twin_paired"),
+        coalesce(col("fp"), lit(false)).as("foil_paired"))
+      .orderBy(col("doc_id"))
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "stream_hourly_agg" -> { (s, d) =>
       EventStream.hourlyAgg(s, d).orderBy(col("hour"), col("event_type"))
@@ -376,24 +424,9 @@ object PipelineQueries {
     // cross-multiplied comparison and hamming of all 44850 pairs in SQL
     // and must emit the IDENTICAL pair set).
     "multimodal_dhash_pairs" -> { (s, d) =>
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
-      val ids = t(s, d, "documents").filter(col("doc_id") < 100).select(col("doc_id"))
-      val schema = StructType(Seq(
-        StructField("doc_id", LongType, nullable = false),
-        StructField("payload", BinaryType, nullable = false)))
-      val payloads = s.createDataFrame(ids.rdd.flatMap { r =>
-        val id = r.getLong(0)
-        val w = 18 + (id % 7).toInt
-        val h = 16 + (id % 5).toInt
-        val f0 = (i: Int) => ((i * (37 + id % 13) + id * 31) % 256).toInt
-        val f1 = (i: Int) => ((i * (37 + id % 13) + id * 31 +
-          (if (i % 29 == 0) 8 else 0)) % 256).toInt
-        val f2 = (i: Int) => ((i * (101 + id % 17) + id * 53) % 256).toInt
-        Seq(Row(id, Multimodal.synthPng(w, h, f0)),
-          Row(id + 1000L, Multimodal.synthPng(w, h, f1)),
-          Row(id + 2000L, Multimodal.synthPng(w, h, f2)))
-      }, schema)
+      val (_, payloads) = probeTriplets(s, d) { (id, w, h, v) =>
+        Multimodal.synthPng(w, h, probePixel(id, v == 2, 0, v == 1))
+      }
       Multimodal.dhashPairs(s, payloads, maxDist = 6)
         .orderBy(col("a_id"), col("b_id"))
     },
@@ -442,36 +475,11 @@ object PipelineQueries {
     // while a different-frequency foil must not (min foil hamming 11
     // measured vs maxDist=6). Emits one verdict row per base doc.
     "multimodal_dhash_mixed" -> { (s, d) =>
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
-      val ids = t(s, d, "documents").filter(col("doc_id") < 100).select(col("doc_id"))
-      val schema = StructType(Seq(
-        StructField("doc_id", LongType, nullable = false),
-        StructField("payload", BinaryType, nullable = false)))
-      val payloads = s.createDataFrame(ids.rdd.flatMap { r =>
-        val id = r.getLong(0)
-        val w = 18 + (id % 7).toInt
-        val h = 16 + (id % 5).toInt
-        val f0 = (i: Int) => ((i * (37 + id % 13) + id * 31) % 256).toInt
-        val f2 = (i: Int) => ((i * (101 + id % 17) + id * 53) % 256).toInt
-        Seq(Row(id, Multimodal.synthPng(w, h, f0)),
-          Row(id + 1000L, Multimodal.synthJpeg(w, h, f0, 0.9f)),
-          Row(id + 2000L, Multimodal.synthPng(w, h, f2)))
-      }, schema)
-      val pairs = Multimodal.dhashPairs(s, payloads, maxDist = 6)
-      val twin = pairs
-        .filter(col("a_id") < 1000L && col("b_id") === col("a_id") + 1000L)
-        .select(col("a_id").as("doc_id"), lit(true).as("tp")).distinct()
-      val foil = pairs
-        .filter((col("a_id") < 1000L && col("b_id") === col("a_id") + 2000L) ||
-          (col("a_id") >= 1000L && col("a_id") < 2000L &&
-            col("b_id") === col("a_id") + 1000L))
-        .select((col("b_id") - 2000L).as("doc_id"), lit(true).as("fp")).distinct()
-      ids.join(twin, Seq("doc_id"), "left").join(foil, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("tp"), lit(false)).as("twin_paired"),
-          coalesce(col("fp"), lit(false)).as("foil_paired"))
-        .orderBy(col("doc_id"))
+      val (ids, payloads) = probeTriplets(s, d) { (id, w, h, v) =>
+        if (v == 1) Multimodal.synthJpeg(w, h, probePixel(id, false, 0, false), 0.9f)
+        else Multimodal.synthPng(w, h, probePixel(id, v == 2, 0, false))
+      }
+      twinFoilVerdicts(ids, Multimodal.dhashPairs(s, payloads, maxDist = 6))
     },
 
     // Perceptual VIDEO near-dup gate: three 3-frame GFV1 videos per doc
@@ -483,26 +491,10 @@ object PipelineQueries {
     // and must emit the identical 114-pair set (100 twins at max
     // hamming 0-4 + 14 structural brightness-relatives, measured).
     "multimodal_video_pairs" -> { (s, d) =>
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
-      val ids = t(s, d, "documents").filter(col("doc_id") < 100).select(col("doc_id"))
-      val schema = StructType(Seq(
-        StructField("doc_id", LongType, nullable = false),
-        StructField("payload", BinaryType, nullable = false)))
-      val payloads = s.createDataFrame(ids.rdd.flatMap { r =>
-        val id = r.getLong(0)
-        val w = 18 + (id % 7).toInt
-        val h = 16 + (id % 5).toInt
-        def frame(f: Int, variant: Int) = Multimodal.synthPng(w, h, { i =>
-          if (variant == 2) ((i * (101 + id % 17) + id * 53 + f * 29) % 256).toInt
-          else ((i * (37 + id % 13) + id * 31 + f * 29 +
-            (if (variant == 1 && f == 1 && i % 29 == 0) 8 else 0)) % 256).toInt
-        })
-        def video(variant: Int) =
-          Multimodal.synthVideo((0 until 3).map(f => frame(f, variant)))
-        Seq(Row(id, video(0)), Row(id + 1000L, video(1)),
-          Row(id + 2000L, video(2)))
-      }, schema)
+      val (_, payloads) = probeTriplets(s, d) { (id, w, h, v) =>
+        Multimodal.synthVideo((0 until 3).map(f =>
+          Multimodal.synthPng(w, h, probePixel(id, v == 2, f, v == 1 && f == 1))))
+      }
       Multimodal.videoPairs(s, payloads, maxDist = 6)
         .orderBy(col("a_id"), col("b_id"))
     },
@@ -516,39 +508,11 @@ object PipelineQueries {
     // hamming 5 measured at q=0.9 vs maxDist=6) and the different-
     // frequency foil must not (min hamming 11 measured).
     "multimodal_avi_pairs" -> { (s, d) =>
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
-      val ids = t(s, d, "documents").filter(col("doc_id") < 100).select(col("doc_id"))
-      val schema = StructType(Seq(
-        StructField("doc_id", LongType, nullable = false),
-        StructField("payload", BinaryType, nullable = false)))
-      val payloads = s.createDataFrame(ids.rdd.flatMap { r =>
-        val id = r.getLong(0)
-        val w = 18 + (id % 7).toInt
-        val h = 16 + (id % 5).toInt
-        def frame(f: Int, variant: Int) = Multimodal.synthJpeg(w, h, { i =>
-          if (variant == 2) ((i * (101 + id % 17) + id * 53 + f * 29) % 256).toInt
-          else ((i * (37 + id % 13) + id * 31 + f * 29 +
-            (if (variant == 1 && f == 1 && i % 29 == 0) 8 else 0)) % 256).toInt
-        }, 0.9f)
-        def avi(variant: Int) =
-          Multimodal.synthAvi((0 until 3).map(f => frame(f, variant)), w, h)
-        Seq(Row(id, avi(0)), Row(id + 1000L, avi(1)), Row(id + 2000L, avi(2)))
-      }, schema)
-      val pairs = Multimodal.videoPairs(s, payloads, maxDist = 6)
-      val twin = pairs
-        .filter(col("a_id") < 1000L && col("b_id") === col("a_id") + 1000L)
-        .select(col("a_id").as("doc_id"), lit(true).as("tp")).distinct()
-      val foil = pairs
-        .filter((col("a_id") < 1000L && col("b_id") === col("a_id") + 2000L) ||
-          (col("a_id") >= 1000L && col("a_id") < 2000L &&
-            col("b_id") === col("a_id") + 1000L))
-        .select((col("b_id") - 2000L).as("doc_id"), lit(true).as("fp")).distinct()
-      ids.join(twin, Seq("doc_id"), "left").join(foil, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("tp"), lit(false)).as("twin_paired"),
-          coalesce(col("fp"), lit(false)).as("foil_paired"))
-        .orderBy(col("doc_id"))
+      val (ids, payloads) = probeTriplets(s, d) { (id, w, h, v) =>
+        Multimodal.synthAvi((0 until 3).map(f => Multimodal.synthJpeg(w, h,
+          probePixel(id, v == 2, f, v == 1 && f == 1), 0.9f)), w, h)
+      }
+      twinFoilVerdicts(ids, Multimodal.videoPairs(s, payloads, maxDist = 6))
     },
 
     // Perceptual audio near-dup gate: three formulaic WAVs per doc id —

@@ -47,11 +47,55 @@ object EventStream {
     spark.read.parquet(s"$sfDir/events.parquet").schema
   }
 
-  /** Serializes the fixture staging copy and memoizes staged keys: several
-    * streaming queries may initialize concurrently (parallel Verify) and
-    * they share the target. */
-  private val stageLock = new Object
-  private val staged = scala.collection.mutable.Set.empty[String]
+  /** Fixture staging for the stream harnesses runs once per (dir, JVM)
+    * through [[graft.Staging.once]]: several streaming queries may
+    * initialize concurrently (parallel Verify) and share the target, and
+    * the first touch in each JVM refreshes it (a stale fixture from a
+    * killed process self-heals). Every file moves in under its final
+    * name, so a concurrently LISTING file source sees the old or the new
+    * file, never a partial one. Staged files carry mtimes from this epoch
+    * on, in minute steps. */
+  private val StreamEpochMs = 1000000000000L
+
+  /** Copies the sf dir's events.parquet into `dir` as events.parquet
+    * (dot-prefixed temp name, hidden from a listing source, then an
+    * ATOMIC_MOVE), its mtime pinned to the stream epoch. */
+  private def stageEventsCopy(sfDir: String, dir: java.nio.file.Path): Unit = {
+    java.nio.file.Files.createDirectories(dir)
+    val tmp = dir.resolve(s".ev.tmp-${java.util.UUID.randomUUID()}")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/events.parquet"), tmp)
+    java.nio.file.Files.move(tmp, dir.resolve("events.parquet"),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    java.nio.file.Files.setLastModifiedTime(dir.resolve("events.parquet"),
+      java.nio.file.attribute.FileTime.fromMillis(StreamEpochMs))
+  }
+
+  /** Writes `df` as the single parquet file `dir/name` (staged in a
+    * hidden sibling dir, then moved in) with mtime epoch + `mtimeOffMs`:
+    * the file source orders files by modification time, so the offsets
+    * fix the micro-batch order. */
+  private def stagePart(dir: java.nio.file.Path, df: DataFrame, name: String,
+                        mtimeOffMs: Long): Unit = {
+    val st = dir.resolve(s".st-${java.util.UUID.randomUUID()}")
+    df.coalesce(1).write.mode("overwrite").parquet(st.toString)
+    val part = st.toFile.listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    val dst = dir.resolve(name)
+    java.nio.file.Files.move(part.toPath, dst,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    java.nio.file.Files.setLastModifiedTime(dst,
+      java.nio.file.attribute.FileTime.fromMillis(StreamEpochMs + mtimeOffMs))
+    org.apache.commons.io.FileUtils.deleteDirectory(st.toFile)
+  }
+
+  /** `ts` of the raw events frame shifted by `days` (raw longs are
+    * nanos under the legacy nanosAsLong read). */
+  private def bumpTs(raw: DataFrame, days: Long): Column =
+    raw.schema("ts").dataType match {
+      case LongType => col("ts") + lit(days * 24 * 3600 * 1000000000L) // nanos
+      case _ => col("ts") + expr(s"interval $days days")
+    }
 
   /** Cloned session (shared SparkContext, isolated SQLConf) with shuffle
     * partitions sized to the test corpus, for the STATEFUL harnesses:
@@ -82,46 +126,38 @@ object EventStream {
     // producer appends to.
     val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
     val dir = java.nio.file.Paths.get(s"/tmp/graft_stream/$key/events")
-    stageLock.synchronized {
-      // staged once per (key, JVM): the first touch in each JVM refreshes
-      // (a stale fixture from a killed process self-heals), and later
-      // queries in the same JVM never re-copy while sibling streams are
-      // already reading the directory. The temp name is dot-prefixed so a
-      // concurrently LISTING file source ignores it (hidden-file rule),
-      // and the ATOMIC_MOVE means readers see the old or new file, never
-      // a partial one.
-      if (!staged.contains(key)) {
-        java.nio.file.Files.createDirectories(dir)
-        val srcPath = java.nio.file.Paths.get(s"$sfDir/events.parquet")
-        // multi-file fixtures (events.parquet as a DIRECTORY of parts)
-        // stage each data file under a name-ordered alias, so a
-        // maxFilesPerTrigger-batched stream consumes them in the
-        // producer's time order — the multi-micro-batch test/deployment
-        // shape; the driver fixture is a single file and stages as one.
-        val parts: Seq[java.nio.file.Path] =
-          if (java.nio.file.Files.isDirectory(srcPath)) {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.list(srcPath).iterator().asScala.toSeq
-              .filter(_.getFileName.toString.endsWith(".parquet"))
-              .sortBy(_.getFileName.toString)
-          } else Seq(srcPath)
-        parts.zipWithIndex.foreach { case (pth, i) =>
-          val name = if (parts.length == 1) "events.parquet"
-            else f"events-$i%05d.parquet"
-          val tmp = dir.resolve(s".$name.tmp-${java.util.UUID.randomUUID()}")
-          java.nio.file.Files.copy(pth, tmp)
-          val dst = dir.resolve(name)
-          java.nio.file.Files.move(tmp, dst,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          // the file source orders files by MODIFICATION TIME, and fast
-          // staging gives all parts the same mtime — pin strictly
-          // increasing mtimes in name order so batched consumption
-          // follows the producer's time order deterministically
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-        }
-        staged += key
+    // later queries in the same JVM never re-copy while sibling streams
+    // are already reading the directory
+    graft.Staging.once(s"stream_events|$key") {
+      java.nio.file.Files.createDirectories(dir)
+      val srcPath = java.nio.file.Paths.get(s"$sfDir/events.parquet")
+      // multi-file fixtures (events.parquet as a DIRECTORY of parts)
+      // stage each data file under a name-ordered alias, so a
+      // maxFilesPerTrigger-batched stream consumes them in the
+      // producer's time order — the multi-micro-batch test/deployment
+      // shape; a single-file fixture stages as one.
+      val parts: Seq[java.nio.file.Path] =
+        if (java.nio.file.Files.isDirectory(srcPath)) {
+          import scala.jdk.CollectionConverters._
+          java.nio.file.Files.list(srcPath).iterator().asScala.toSeq
+            .filter(_.getFileName.toString.endsWith(".parquet"))
+            .sortBy(_.getFileName.toString)
+        } else Seq(srcPath)
+      parts.zipWithIndex.foreach { case (pth, i) =>
+        val name = if (parts.length == 1) "events.parquet"
+          else f"events-$i%05d.parquet"
+        val tmp = dir.resolve(s".$name.tmp-${java.util.UUID.randomUUID()}")
+        java.nio.file.Files.copy(pth, tmp)
+        val dst = dir.resolve(name)
+        java.nio.file.Files.move(tmp, dst,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        // the file source orders files by MODIFICATION TIME, and fast
+        // staging gives all parts the same mtime — pin strictly
+        // increasing mtimes in name order so batched consumption
+        // follows the producer's time order deterministically
+        java.nio.file.Files.setLastModifiedTime(dst,
+          java.nio.file.attribute.FileTime.fromMillis(StreamEpochMs + i * 60000L))
       }
     }
     // Optional micro-batch sizing knob (ops/tests): with N staged files
@@ -217,48 +253,22 @@ object EventStream {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
     val dir = java.nio.file.Paths.get(s"/tmp/graft_stream/$key/events_swin")
-    stageLock.synchronized {
-      val k2 = key + "/swin"
-      if (!staged.contains(k2)) {
-        java.nio.file.Files.createDirectories(dir)
-        val srcPath = java.nio.file.Paths.get(s"$sfDir/events.parquet")
-        val tmp = dir.resolve(s".ev.tmp-${java.util.UUID.randomUUID()}")
-        java.nio.file.Files.copy(srcPath, tmp)
-        java.nio.file.Files.move(tmp, dir.resolve("events.parquet"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        // TWO sentinel files (30 and 60 days past max), consumed one per
-        // micro-batch below: emission uses the watermark computed at the
-        // END of the PREVIOUS batch, and the final watermark-only flush
-        // is a no-data batch that processAllAvailable does not wait for
-        // — so the second sentinel's DATA batch (which processAllAvailable
-        // does cover) runs with a watermark already 30 days past every
-        // real session and deterministically flushes them all.
-        val raw = spark.read.parquet(s"$sfDir/events.parquet")
-        java.nio.file.Files.setLastModifiedTime(dir.resolve("events.parquet"),
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L))
-        Seq(30L, 60L).zipWithIndex.foreach { case (days, i) =>
-          val bumped = raw.schema("ts").dataType match {
-            case org.apache.spark.sql.types.LongType =>
-              col("ts") + lit(days * 24 * 3600 * 1000000000L) // nanos
-            case _ => col("ts") + expr(s"interval $days days")
-          }
-          val sentStage = dir.resolve(s".sent-${java.util.UUID.randomUUID()}")
-          raw.orderBy(col("ts").desc).limit(1)
-            .withColumn("event_id", lit(-1L - i))
-            .withColumn("user_id", lit(-1L - i))
-            .withColumn("ts", bumped)
-            .coalesce(1).write.mode("overwrite").parquet(sentStage.toString)
-          val part = sentStage.toFile.listFiles()
-            .find(_.getName.endsWith(".parquet")).get
-          val dst = dir.resolve(s"events-sentinel-$i.parquet")
-          java.nio.file.Files.move(part.toPath, dst,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1000000000000L + (i + 1) * 60000L))
-          org.apache.commons.io.FileUtils.deleteDirectory(sentStage.toFile)
-        }
-        staged += k2
+    graft.Staging.once(s"stream_events|$key/swin") {
+      stageEventsCopy(sfDir, dir)
+      // TWO sentinel files (30 and 60 days past max), consumed one per
+      // micro-batch below: emission uses the watermark computed at the
+      // END of the PREVIOUS batch, and the final watermark-only flush
+      // is a no-data batch that processAllAvailable does not wait for
+      // — so the second sentinel's DATA batch (which processAllAvailable
+      // does cover) runs with a watermark already 30 days past every
+      // real session and deterministically flushes them all.
+      val raw = spark.read.parquet(s"$sfDir/events.parquet")
+      Seq(30L, 60L).zipWithIndex.foreach { case (days, i) =>
+        stagePart(dir, raw.orderBy(col("ts").desc).limit(1)
+          .withColumn("event_id", lit(-1L - i))
+          .withColumn("user_id", lit(-1L - i))
+          .withColumn("ts", bumpTs(raw, days)),
+          s"events-sentinel-$i.parquet", (i + 1) * 60000L)
       }
     }
     val stream = graft.Tables.normalizeEventTs(
@@ -452,52 +462,22 @@ object EventStream {
     val spark = tunedSession(sparkIn)
     val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
     val dir = java.nio.file.Paths.get(s"/tmp/graft_stream/$key/events_late")
-    stageLock.synchronized {
-      val k2 = key + "/late"
-      if (!staged.contains(k2)) {
-        java.nio.file.Files.createDirectories(dir)
-        val srcPath = java.nio.file.Paths.get(s"$sfDir/events.parquet")
-        val tmp0 = dir.resolve(s".ev.tmp-${java.util.UUID.randomUUID()}")
-        java.nio.file.Files.copy(srcPath, tmp0)
-        java.nio.file.Files.move(tmp0, dir.resolve("events.parquet"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        java.nio.file.Files.setLastModifiedTime(dir.resolve("events.parquet"),
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L))
-        val raw = spark.read.parquet(s"$sfDir/events.parquet")
-        def bump(days: Long) = raw.schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType =>
-            col("ts") + lit(days * 24 * 3600 * 1000000000L) // nanos
-          case _ => col("ts") + expr(s"interval $days days")
-        }
-        def stagePart(df: org.apache.spark.sql.DataFrame, name: String,
-                      mtimeOff: Long): Unit = {
-          val st = dir.resolve(s".st-${java.util.UUID.randomUUID()}")
-          df.coalesce(1).write.mode("overwrite").parquet(st.toString)
-          val part = st.toFile.listFiles()
-            .find(_.getName.endsWith(".parquet")).get
-          val dst = dir.resolve(name)
-          java.nio.file.Files.move(part.toPath, dst,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1000000000000L + mtimeOff))
-          org.apache.commons.io.FileUtils.deleteDirectory(st.toFile)
-        }
-        // late rows: a DETERMINISTIC subset (event_id % 20) shifted 10
-        // days earlier, values bumped +10000 — oracle-replayable
-        stagePart(raw.filter(col("event_id") % 20 === 0)
-          .withColumn("ts", bump(-10))
-          .withColumn("value", col("value") + lit(10000.0)),
-          "events-late.parquet", 60000L)
-        Seq(30L, 60L).zipWithIndex.foreach { case (days, i) =>
-          stagePart(raw.orderBy(col("ts").desc).limit(1)
-            .withColumn("ts", bump(days))
-            .withColumn("event_type", lit("sentinel"))
-            .withColumn("event_id", lit(-1L - i))
-            .withColumn("user_id", lit(-1L - i)),
-            s"events-sentinel-$i.parquet", 120000L + i * 60000L)
-        }
-        staged += k2
+    graft.Staging.once(s"stream_events|$key/late") {
+      stageEventsCopy(sfDir, dir)
+      val raw = spark.read.parquet(s"$sfDir/events.parquet")
+      // late rows: a DETERMINISTIC subset (event_id % 20) shifted 10
+      // days earlier, values bumped +10000 — oracle-replayable
+      stagePart(dir, raw.filter(col("event_id") % 20 === 0)
+        .withColumn("ts", bumpTs(raw, -10))
+        .withColumn("value", col("value") + lit(10000.0)),
+        "events-late.parquet", 60000L)
+      Seq(30L, 60L).zipWithIndex.foreach { case (days, i) =>
+        stagePart(dir, raw.orderBy(col("ts").desc).limit(1)
+          .withColumn("ts", bumpTs(raw, days))
+          .withColumn("event_type", lit("sentinel"))
+          .withColumn("event_id", lit(-1L - i))
+          .withColumn("user_id", lit(-1L - i)),
+          s"events-sentinel-$i.parquet", 120000L + i * 60000L)
       }
     }
     val stream0 = graft.Tables.normalizeEventTs(
@@ -666,49 +646,23 @@ object EventStream {
     val spark = tunedSession(sparkIn)
     val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
     val dir = java.nio.file.Paths.get(s"/tmp/graft_stream/$key/events_ssleft")
-    stageLock.synchronized {
-      val k2 = key + "/ssleft"
-      if (!staged.contains(k2)) {
-        java.nio.file.Files.createDirectories(dir)
-        val srcPath = java.nio.file.Paths.get(s"$sfDir/events.parquet")
-        val tmp = dir.resolve(s".ev.tmp-${java.util.UUID.randomUUID()}")
-        java.nio.file.Files.copy(srcPath, tmp)
-        java.nio.file.Files.move(tmp, dir.resolve("events.parquet"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        java.nio.file.Files.setLastModifiedTime(dir.resolve("events.parquet"),
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L))
-        val raw = spark.read.parquet(s"$sfDir/events.parquet")
-        Seq(30L, 60L).zipWithIndex.foreach { case (days, i) =>
-          val bumped = raw.schema("ts").dataType match {
-            case org.apache.spark.sql.types.LongType =>
-              col("ts") + lit(days * 24 * 3600 * 1000000000L) // nanos
-            case _ => col("ts") + expr(s"interval $days days")
-          }
-          val base = raw.orderBy(col("ts").desc).limit(1)
-            .withColumn("ts", bumped)
-          // the error sentinel's user has NO click sentinel — its null
-          // row is the flushed-last signal the poll waits on
-          val sent = base
-            .withColumn("event_id", lit(-1L - i))
-            .withColumn("user_id", lit(-1L - i))
-            .withColumn("event_type", lit("error"))
-            .unionByName(base
-              .withColumn("event_id", lit(-10L - i))
-              .withColumn("user_id", lit(-10L - i))
-              .withColumn("event_type", lit("click")))
-          val sentStage = dir.resolve(s".sent-${java.util.UUID.randomUUID()}")
-          sent.coalesce(1).write.mode("overwrite").parquet(sentStage.toString)
-          val part = sentStage.toFile.listFiles()
-            .find(_.getName.endsWith(".parquet")).get
-          val dst = dir.resolve(s"events-sentinel-$i.parquet")
-          java.nio.file.Files.move(part.toPath, dst,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1000000000000L + (i + 1) * 60000L))
-          org.apache.commons.io.FileUtils.deleteDirectory(sentStage.toFile)
-        }
-        staged += k2
+    graft.Staging.once(s"stream_events|$key/ssleft") {
+      stageEventsCopy(sfDir, dir)
+      val raw = spark.read.parquet(s"$sfDir/events.parquet")
+      Seq(30L, 60L).zipWithIndex.foreach { case (days, i) =>
+        val base = raw.orderBy(col("ts").desc).limit(1)
+          .withColumn("ts", bumpTs(raw, days))
+        // the error sentinel's user has NO click sentinel — its null
+        // row is the flushed-last signal the poll waits on
+        val sent = base
+          .withColumn("event_id", lit(-1L - i))
+          .withColumn("user_id", lit(-1L - i))
+          .withColumn("event_type", lit("error"))
+          .unionByName(base
+            .withColumn("event_id", lit(-10L - i))
+            .withColumn("user_id", lit(-10L - i))
+            .withColumn("event_type", lit("click")))
+        stagePart(dir, sent, s"events-sentinel-$i.parquet", (i + 1) * 60000L)
       }
     }
     def stream() = graft.Tables.normalizeEventTs(
@@ -774,36 +728,26 @@ object EventStream {
     StructField("lang", StringType), StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-  /** Per-key staging locks: doc-batch staging runs a full Spark job
-    * (union + filter + write), so holding the GLOBAL stageLock for its
-    * duration would serialize every concurrently-initializing streaming
-    * gate behind it — the global lock only guards the memo set. */
-  private val keyLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
   private def readDocStream(spark: SparkSession, stageKey: String,
                             batch: () => DataFrame): DataFrame = {
     val key = stageKey.replaceAll("[^A-Za-z0-9.]", "_")
     val dir = java.nio.file.Paths.get(s"/tmp/graft_stream/$key/documents")
-    keyLocks.computeIfAbsent(key, _ => new Object).synchronized {
-      if (!stageLock.synchronized(staged.contains(key))) {
-        java.nio.file.Files.createDirectories(dir)
-        // the streamed batch is materialized as constructed, the way a
-        // crawler's landing dir only receives the new batch; staged to a
-        // sibling scratch dir, then the single part file moves in
-        // atomically (readers see the old or new file, never a partial)
-        val tmp = dir.getParent.resolve(s".stage-${java.util.UUID.randomUUID()}")
-        batch().coalesce(1)
-          .write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        java.nio.file.Files.move(part.toPath, dir.resolve("docs.parquet"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        new java.io.File(tmp.toString).listFiles().foreach(_.delete())
-        java.nio.file.Files.deleteIfExists(tmp)
-        stageLock.synchronized { staged += key }
-      }
+    graft.Staging.once(s"stream_docs|$key") {
+      java.nio.file.Files.createDirectories(dir)
+      // the streamed batch is materialized as constructed, the way a
+      // crawler's landing dir only receives the new batch; staged to a
+      // sibling scratch dir, then the single part file moves in
+      // atomically (readers see the old or new file, never a partial)
+      val tmp = dir.getParent.resolve(s".stage-${java.util.UUID.randomUUID()}")
+      batch().coalesce(1)
+        .write.mode("overwrite").parquet(tmp.toString)
+      val part = new java.io.File(tmp.toString).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.move(part.toPath, dir.resolve("docs.parquet"),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      new java.io.File(tmp.toString).listFiles().foreach(_.delete())
+      java.nio.file.Files.deleteIfExists(tmp)
     }
     spark.readStream.schema(docSchema).parquet(dir.toString)
   }
