@@ -11,6 +11,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
 import graft.sinks.OrcSink
+import graft.sources.SqlDumpSource.DecodeFailure
 
 /** Conversion orchestration (reference P1-P5, SURVEY.md §2.5).
   *
@@ -66,8 +67,9 @@ object ConversionJob {
   /** One table to convert: `frame` builds its rows lazily (building it
     * must run no job — resume reads only its schema). `rows` is the row
     * count when the source already knows it (it may run the source's own
-    * decode job, and throws the source's failure to decode the table);
-    * None makes the conversion count the frame first. */
+    * decode job, and throws the source's failure to decode the table, a
+    * [[DecodeFailure]], which fails the table with no retry); None makes
+    * the conversion count the frame first. */
   final case class Table(name: String, frame: () => DataFrame,
                          rows: () => Option[Long] = () => None)
 
@@ -139,6 +141,10 @@ object ConversionJob {
         case Failure(e) =>
           lastError = Some(e.getMessage)
           logger.log(s"Error converting $name (attempt $attempt/${cfg.retries + 1}): ${e.getMessage}")
+          // the source decoded the same rows and failed: another attempt
+          // would fail the same way
+          if (e.isInstanceOf[DecodeFailure])
+            return TableResult(name, success = false, 0L, 0, attempt, lastError)
           if (attempt <= cfg.retries) Thread.sleep(cfg.retryBackoffMs * attempt)
       }
     }

@@ -297,7 +297,7 @@ object LlmQueries {
   /** Frozen IVF centroids for the hybrid-serve gate: trained once per
     * sf dir (deterministic Lloyd, same dials as the ann serve rows) —
     * index build happens at staging time, never inside a served query. */
-  private def hybridCentroidsFor(s: SparkSession, d: String): Seq[Seq[Double]] =
+  private[graft] def hybridCentroidsFor(s: SparkSession, d: String): Seq[Seq[Double]] =
     Staging.once(s"hybrid_centroids|$d") {
       Similarity.trainIvfCentroids(t(s, d, "embeddings"), "vec_id",
         "embedding", nCentroids = 16, lloydIters = 2)

@@ -13,9 +13,13 @@ import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.hadoop.mapreduce.lib.input.TextInputFormat
 import org.apache.hadoop.util.LineReader
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.Platform
 
 /** SQL-dump (mysqldump-style) source.
   *
@@ -48,9 +52,10 @@ import org.apache.spark.storage.StorageLevel
   *
   * The reference reads its dump twice (sh:325-326 + 371-372). A conversion
   * here reads it once: [[decodeOnce]] discovers the tables in one job and
-  * decodes the INSERTs of all selected tables in one more, into rows that
-  * stay pinned until the conversion releases them. [[parse]] returns lazy,
-  * unpinned frames instead; each re-reads the file when evaluated.
+  * decodes the INSERTs of all selected tables in one more, into Spark's
+  * internal rows that stay pinned until the conversion releases them.
+  * [[parse]] returns lazy, unpinned frames instead; each re-reads the file
+  * when evaluated.
   */
 object SqlDumpSource {
 
@@ -710,10 +715,18 @@ object SqlDumpSource {
         : Option[(Int, Try[Seq[Row]])]
   }
 
-  /** The selected tables of a dump, decoded for one conversion. Each
-    * table's [[frame]] filters one shared RDD of table-tagged rows;
-    * [[rows]] gives the table's row count from the job that decoded them.
-    * The pin is the caller's: [[release]] unpersists it. */
+  /** Thrown by [[DecodedDump.rows]] for a table whose rows failed to
+    * decode: the same input fails the same way on every attempt. */
+  final class DecodeFailure(message: String) extends IllegalArgumentException(message)
+
+  /** The selected tables of a dump, decoded for one conversion. The decode
+    * job pins each table's rows as `UnsafeRow`s packed into [[RowPage]]s,
+    * so table i's [[frame]] scans its own pages and runs no encoder;
+    * [[rows]] gives the table's row count from the same job. A table
+    * whose rows failed to decode — a bad cast, a malformed hex literal, a
+    * NULL in a NOT NULL column — has its first error pinned in their place
+    * and its frame must not be read. The pin is the caller's: [[release]]
+    * unpersists it. */
   final class DecodedDump private[SqlDumpSource] (
       frames: Map[String, DataFrame],
       decode: () => Map[String, Either[String, Long]],
@@ -724,13 +737,58 @@ object SqlDumpSource {
     /** The table's rows; building the frame runs no job. */
     def frame(table: String): DataFrame = frames(table)
     /** The table's row count; the first call runs the decode job. Throws
-      * the table's decode failure. None after the streaming fallback,
-      * which counts nothing. */
+      * the table's decode failure as a [[DecodeFailure]]. None after the
+      * streaming fallback, which counts nothing. */
     def rows(table: String): Option[Long] = decoded.get(table).map {
       case Right(n) => n
-      case Left(error) => throw new IllegalArgumentException(error)
+      case Left(error) => throw new DecodeFailure(error)
     }
     def release(): Unit = pinned.foreach(_.unpersist(blocking = false))
+  }
+
+  /** A run of one table's decoded rows — `UnsafeRow` bytes back to back,
+    * `sizes` the length of each — or that table's decode error in their
+    * place. Packed, a row is pinned at its own bytes plus 4: an `UnsafeRow`
+    * object and byte array per row would add about 56 more. */
+  private[sources] final class RowPage(val table: Int, bytes: Array[Byte],
+                                       val sizes: Array[Int], val error: String)
+      extends Serializable {
+    def rows(numFields: Int): Iterator[InternalRow] = {
+      var offset = Platform.BYTE_ARRAY_OFFSET.toLong
+      sizes.iterator.map { n =>
+        val row = new UnsafeRow(numFields)
+        row.pointTo(bytes, offset, n)
+        offset += n
+        row
+      }
+    }
+  }
+
+  /** Copies one table's rows into [[RowPage]]s of about 4 MB each: a page
+    * is one cached element, so a partition larger than memory spills page
+    * by page. */
+  private final class PageWriter(table: Int) {
+    private var bytes = Array.emptyByteArray
+    private var used = 0
+    private val sizes = mutable.ArrayBuilder.make[Int]
+    def add(row: UnsafeRow): Unit = {
+      val n = row.getSizeInBytes
+      if (used + n > bytes.length)
+        bytes = java.util.Arrays.copyOf(bytes, math.max(used + n, math.max(bytes.length * 2, 4096)))
+      Platform.copyMemory(row.getBaseObject, row.getBaseOffset, bytes,
+        Platform.BYTE_ARRAY_OFFSET + used, n)
+      used += n
+      sizes += n
+    }
+    def full: Boolean = used >= (4 << 20)
+    def flush(): Iterator[RowPage] =
+      if (sizes.length == 0) Iterator.empty
+      else {
+        val page = new RowPage(table, java.util.Arrays.copyOf(bytes, used), sizes.result(), null)
+        used = 0
+        sizes.clear()
+        Iterator.single(page)
+      }
   }
 
   /** Reads a dump of any [[Dialect]]. Two read paths:
@@ -778,14 +836,18 @@ object SqlDumpSource {
       *  1. Discover: one job reads the units, cached, checks them for a
       *     cut literal and collects the table declarations.
       *  2. Decode: the first [[DecodedDump.rows]] call runs one job that
-      *     decodes the units of all selected tables from the cache into a
-      *     single table-tagged row RDD, pinned MEMORY_AND_DISK, and counts
-      *     each table's rows. The units are unpersisted when it ends. The
-      *     pin keeps its lineage: lost blocks recompute from the file.
-      * A unit whose rows fail to decode (a bad cast, a malformed hex
-      * literal) leaves its error in place of its rows, so it fails only its
-      * own table. A dump that needs the streaming fallback decodes as
-      * [[parse]] does, with no pin and no counts. */
+      *     decodes the units of all selected tables from the cache, turns
+      *     each typed row into an `UnsafeRow` with the serializer
+      *     `createDataFrame` runs (the same values: decimal rounding and
+      *     overflow, date rebase, JVM-zone timestamps, NOT NULL checks),
+      *     pins the rows packed per table ([[RowPage]]) MEMORY_AND_DISK
+      *     and counts each table's rows. The units are unpersisted when it
+      *     ends. The pin keeps its lineage: lost blocks recompute from the
+      *     file.
+      * A unit whose rows fail to decode or to convert leaves its error in
+      * place of its rows, so it fails only its own table, in the decode
+      * job. A dump that needs the streaming fallback decodes as [[parse]]
+      * does, with no pin and no counts. */
     def decodeOnce(d: Dialect, spark: SparkSession, path: String,
                    tables: Seq[String]): DecodedDump = {
       val select = selects(tables)
@@ -800,34 +862,37 @@ object SqlDumpSource {
         case Some(all) =>
           val defs = all.filter(td => select(td.name)).toIndexedSeq
           val index = defs.zipWithIndex.map { case (td, i) => td.name -> (i, td.schema) }.toMap
-          // a failed unit's table index is stored inverted (~i, never a
-          // row tag) with the error text as the row
-          val tagged: RDD[(Int, Row)] = units.flatMap(u => d.decode(u, index) match {
-            case Some((i, Success(rows))) => rows.iterator.map(i -> _)
-            case Some((i, Failure(e))) => Iterator(~i -> Row(e.toString))
-            case None => Iterator.empty
-          }).persist(StorageLevel.MEMORY_AND_DISK)
+          val toRows = defs.map(td => ExpressionEncoder(td.schema, lenient = true).createSerializer())
+          val pinned: RDD[RowPage] = units.mapPartitions { it =>
+            val pages = defs.indices.map(new PageWriter(_))
+            val failed = new Array[Boolean](defs.size)
+            it.flatMap(u => d.decode(u, index) match {
+              case Some((i, rows)) if !failed(i) =>
+                rows.flatMap(rs => Try(rs.foreach(r =>
+                  pages(i).add(toRows(i)(r).asInstanceOf[UnsafeRow])))) match {
+                  case Success(_) => if (pages(i).full) pages(i).flush() else Iterator.empty
+                  case Failure(e) =>
+                    failed(i) = true
+                    Iterator(new RowPage(i, Array.emptyByteArray, Array.emptyIntArray, e.toString))
+                }
+              case _ => Iterator.empty
+            }) ++ pages.iterator.flatMap(_.flush())
+          }.persist(StorageLevel.MEMORY_AND_DISK)
           val frames = defs.zipWithIndex.map { case (td, i) =>
-            td.name -> spark.createDataFrame(tagged.filter(_._1 == i).map(_._2), td.schema)
+            val fields = td.schema.length
+            td.name -> GraftBridge.internalCreateDataFrame(spark,
+              pinned.flatMap(p => if (p.table == i) p.rows(fields) else Iterator.empty), td.schema)
           }.toMap
           def decode(): Map[String, Either[String, Long]] =
             try {
-              val n = defs.size
-              val parts = tagged.mapPartitions { it =>
-                val counts = new Array[Long](n)
-                val errors = new Array[String](n)
-                it.foreach { case (i, r) =>
-                  if (i >= 0) counts(i) += 1
-                  else if (errors(~i) == null) errors(~i) = r.getString(0)
-                }
-                Iterator(counts -> errors)
-              }.collect()
+              val pages = pinned.map(p => (p.table, p.sizes.length, p.error)).collect()
               defs.indices.map { i =>
-                defs(i).name -> parts.iterator.map(_._2(i)).find(_ != null)
-                  .toLeft(parts.iterator.map(_._1(i)).sum)
+                val own = pages.filter(_._1 == i)
+                defs(i).name -> own.collectFirst { case (_, _, e) if e != null => e }
+                  .toLeft(own.map(_._2.toLong).sum)
               }.toMap
             } finally units.unpersist(blocking = false)
-          new DecodedDump(frames, () => decode(), Seq(units, tagged))
+          new DecodedDump(frames, () => decode(), Seq(units, pinned))
       }
     }
 

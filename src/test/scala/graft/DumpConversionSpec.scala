@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ConversionJob.JobConfig
 import graft.sinks.OrcSink
-import graft.sources.{PgDumpFixture, SqlDumpSource}
+import graft.sources.{PgDumpFixture, PgDumpSource, SqlDumpSource}
 
 /** A dump conversion (`Cli.run(dump …)` for a mysqldump, `Cli.run(pgdump
   * …)` for a pg_dump) reads and decodes the dump once for all its tables:
@@ -202,7 +202,8 @@ class DumpConversionSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   test("a table that fails to decode or to write fails alone; no pin is left") {
     // bad_cast: a non-numeric INT cell; bad_hex: a malformed hex literal;
-    // bad_write: NULL in a NOT NULL column, which the ORC write rejects
+    // bad_write: NULL in a NOT NULL column. Each fails in the decode job,
+    // on the first attempt: decoding the same rows again fails the same way
     val extra = Map(
       "dump" ->
         """CREATE TABLE `bad_cast` (`id` INT, `v` VARCHAR(8));
@@ -248,7 +249,29 @@ class DumpConversionSpec extends AnyFunSuite with SparkSessionTestWrapper {
         assert(byTable("bad_hex").error.exists(
           _.contains("malformed hex literal X'zz': non-hex digit in 'zz'")), byTable("bad_hex"))
       }
+      failed.foreach(t => assert(byTable(t).attempts == 1, byTable(t)))
       assert(r.total == (if (cmd == "dump") 6 else 5), r)
+      assert(pinned() == before, cmd)
+    }
+  }
+
+  test("the decoded rows are pinned at under 2x the dump's bytes, and released") {
+    for ((cmd, write) <- Dialects) {
+      val before = pinned()
+      val dir = tmp("dumpconv-pinned")
+      val size = write(s"$dir/d.sql", "")
+      val dump = withSplits(size / 3 + 1)(
+        if (cmd == "dump") SqlDumpSource.decodeOnce(spark, s"$dir/d.sql", Seq("all"))
+        else PgDumpSource.decodeOnce(spark, s"$dir/d.sql", Seq("all")))
+      try {
+        Rows.foreach { case (t, n) => assert(dump.rows(t).contains(n.toLong), s"$cmd $t") }
+        GraftBus.drain(sc)
+        val infos = sc.getRDDStorageInfo.filter(i => !before.contains(i.id))
+        assert(infos.nonEmpty && infos.forall(_.numCachedPartitions > 0), infos.mkString(", "))
+        val bytes = infos.map(i => i.memSize + i.diskSize).sum
+        info(f"$cmd: $bytes%d pinned bytes, ${bytes.toDouble / size}%.2fx the $size%d-byte dump")
+        assert(bytes <= 2.0 * size, s"$cmd pinned $bytes bytes for a $size-byte dump")
+      } finally dump.release()
       assert(pinned() == before, cmd)
     }
   }
